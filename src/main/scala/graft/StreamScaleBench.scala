@@ -129,11 +129,6 @@ object StreamScaleBench {
     Cell(runs.map(_._1), runs.last._2, runs.last._3)
   }
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    s(s.size / 2)
-  }
-
   /** args: [smallKeys] [reps] [outPath]; large scale = 10× keys. */
   def main(args: Array[String]): Unit = {
     val smallKeys = if (args.length > 0) args(0).toLong else 10000L
@@ -192,13 +187,13 @@ object StreamScaleBench {
       val largeEvs = events(largeKeys)
       val sm = measure(spark, smallEvs, reps, mode)(build)
       val lg = measure(spark, largeEvs, reps, mode)(build)
-      val rateRatio = median(lg.rowsPerSec) / median(sm.rowsPerSec)
+      val rateRatio = Bench.median(lg.rowsPerSec) / Bench.median(sm.rowsPerSec)
       def perKey(rows: Long, keys: Long): Double =
         if (rows >= 0) math.round(rows.toDouble / keys * 100.0) / 100.0 else -1.0
       s""""$name":{"small_keys":$smallKeys,"large_keys":$largeKeys,""" +
         s""""small_events":${smallEvs.size},"large_events":${largeEvs.size},""" +
-        s""""small_rows_per_sec":${median(sm.rowsPerSec).round},""" +
-        s""""large_rows_per_sec":${median(lg.rowsPerSec).round},""" +
+        s""""small_rows_per_sec":${Bench.median(sm.rowsPerSec).round},""" +
+        s""""large_rows_per_sec":${Bench.median(lg.rowsPerSec).round},""" +
         s""""rate_ratio":${math.round(rateRatio * 100.0) / 100.0},""" +
         s""""small_runs":${sm.rowsPerSec.map(_.round).mkString("[", ",", "]")},""" +
         s""""large_runs":${lg.rowsPerSec.map(_.round).mkString("[", ",", "]")},""" +

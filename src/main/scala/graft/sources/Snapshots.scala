@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count => fCount, input_file_name, lit, when, max => fMax, min => fMin}
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
@@ -56,9 +56,6 @@ object Snapshots {
   private val TsHeader = "#ts="
   private val RowsHeader = "#rows="
   private val CopiedHeader = "#copied="
-  private val RenameSeqHeader = "#renameseq="
-  private val WidenSeqHeader = "#widenseq="
-  private val DropSeqHeader = "#dropseq="
   private val DvHeader = "#dv="
   private val DvRowsHeader = "#dvrows="
   private val HwmName = "_batch.hwm"
@@ -624,7 +621,6 @@ object Snapshots {
       case e if e.rows.isDefined => e
       case e                     => e.copy(rows = Some(footerRowCount(conf, new Path(e.path))))
     }
-    val tmp = new Path(md, s"v$v.list.tmp-${java.util.UUID.randomUUID()}")
     val header = s"$OpHeader$op\n" +
       s"$TsHeader${System.currentTimeMillis()}\n" +
       (if (statsCols.nonEmpty) s"$StatsHeader${statsCols.mkString(",")}\n" else "") +
@@ -635,14 +631,38 @@ object Snapshots {
       (Seq(e.path) ++ e.stats.flatMap(s => Seq(s.min.toString, s.max.toString))
         :+ e.rows.get.toString).mkString("\t")
     }
-    val payload = header + body.mkString("", "\n", "\n")
+    claimChecked(f, new Path(md, s"v$v.list"), header + body.mkString("", "\n", "\n"))
+  }
+
+  /** Write `payload` behind its `#crc=` line to a unique `.tmp` beside
+    * `dst` and [[claimExclusive]] `dst` from it — the one write path of
+    * manifests, tags and schema-change entries. Returns whether this
+    * writer won.
+    */
+  private def claimChecked(f: FileSystem, dst: Path, payload: String): Boolean = {
+    val tmp = new Path(dst.getParent, s"${dst.getName}.tmp-${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, true)
     try out.write((s"$CrcHeader${crc32Of(payload)}\n" + payload).getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    val dst = new Path(md, s"v$v.list")
     val won = claimExclusive(f, tmp, dst)
     f.delete(tmp, false) // winner's hard link persists; loser's tmp is junk
     won
+  }
+
+  /** The body of a [[claimChecked]] file, CRC-verified: a missing header
+    * or a flipped bit is a loud refusal naming `what`, never a wrong read.
+    */
+  private def readChecked(f: FileSystem, p: Path, what: String): String = {
+    val in = f.open(p)
+    val content =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    require(content.startsWith(CrcHeader), s"$what is malformed")
+    val nl = content.indexOf('\n')
+    val body = content.substring(nl + 1)
+    require(crc32Of(body) == content.substring(CrcHeader.length, nl).toLong,
+      s"$what failed its CRC check: metadata corruption")
+    body
   }
 
   /** Atomically claim `dst` from `tmp` — hard LINK on local filesystems
@@ -704,45 +724,10 @@ object Snapshots {
     * the retention/vacuum pass's job — same split as every
     * manifest-based format). Publishes and returns the new version.
     */
-  /** Renames whose mapping is still ACTIVE on `entries` — some live file
-    * was physically written under the old column name. The copy-on-write
-    * commits ([[commitDelete]], [[commitMerge]]) refuse while one is
-    * active: their raw parquet reads would pick one generation's footer
-    * and silently NULL the other's renamed column (data loss), and their
-    * staged rewrites escape the rename's fileKeys scope, resurrecting the
-    * old physical name for post-rename readers. [[commitOptimize]] is the
-    * fold: it reads THROUGH the rename mapping and rewrites every file
-    * under the new name, after which no mapping is active and the
-    * rewrite commits are legal again.
-    */
-  private def activeRenames(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry]): Seq[ColumnRename] =
-    renameLog(spark, dir).filter(r =>
-      r.version <= version && entries.exists(e => r.fileKeys.contains(fileKey(e.path))))
-
-  private def requireNoActiveRename(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry],
-      op: String): Unit = {
-    val active = activeRenames(spark, dir, version, entries)
-    require(active.isEmpty,
-      s"$op on $dir refused: column renames ${active.map(r => s"'${r.from}'->'${r.to}'").mkString(", ")} " +
-        "are still active on live files (a raw rewrite would silently NULL the renamed column " +
-        "across mixed physical schemas) — run commitOptimize first to fold the rename into a " +
-        "uniform physical schema")
-  }
-
   def commitDelete(spark: SparkSession, dir: String, column: String, lo: Long, hi: Long): Int = {
     val prev = latestVersion(spark, dir)
     val (statsCols, entries) = manifest(spark, dir, prev)
-    requireNoActiveRename(spark, dir, prev, entries, "DELETE")
-    requireNoActiveWiden(spark, dir, prev, entries, "DELETE")
-    requireNoActiveDrop(spark, dir, prev, entries, "DELETE")
+    requireNoActiveSchemaChange(spark, dir, prev, entries, "DELETE")
     val ci = statsCols.indexOf(column)
     require(ci >= 0, s"delete needs a zone map on $column; $dir declares $statsCols")
     val (touched, untouched) =
@@ -827,16 +812,18 @@ object Snapshots {
     val prev = latestVersion(spark, dir)
     require(prev >= 1, s"cannot merge into an empty table at $dir")
     val (statsCols, entries) = manifest(spark, dir, prev)
-    requireNoActiveRename(spark, dir, prev, entries, "MERGE")
-    requireNoActiveWiden(spark, dir, prev, entries, "MERGE")
-    requireNoActiveDrop(spark, dir, prev, entries, "MERGE")
+    requireNoActiveSchemaChange(spark, dir, prev, entries, "MERGE")
     // The change SOURCE is read once (persisted) and shared by the key
     // aggregation, the rewrite's union side, and the feed's postimage
     // typing join — previously each of those re-derived the caller's
     // change query (three scans of the change source per commit; guide
     // §1.2: don't recompute what you already have). Batch-sized, freed
-    // before return.
-    val ch = changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // before return — unless the caller persisted it: that cache is the
+    // caller's, reused here and never evicted.
+    val ownsCache = changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val ch =
+      if (ownsCache) changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else changes
     // ONE aggregation serves both the dup-key guard and every key-distinct
     // consumer below (hit test, anti-join, feed semi-joins) — the change
     // batch was previously re-aggregated four times per commit, which at
@@ -944,7 +931,7 @@ object Snapshots {
       publishChanges(spark, dir, chStage, v)
       v
     } finally {
-      ch.unpersist(blocking = false)
+      if (ownsCache) ch.unpersist(blocking = false)
       keyCounts.unpersist(blocking = false)
       baseTouched.foreach(_.unpersist(blocking = false))
       matchedKeysP.foreach(_.unpersist(blocking = false))
@@ -986,34 +973,28 @@ object Snapshots {
     val f = fs(spark, new Path(entries.head.path))
     val totalBytes = entries.map(e => f.getFileStatus(new Path(e.path)).getLen).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    // OPTIMIZE is the rename FOLD: when a column-rename mapping is still
-    // active on live files, the rewrite reads THROUGH the mapping (every
-    // group under its logical name — a raw multi-footer read would
-    // silently NULL the renamed column across mixed physical schemas) and
-    // stages every row under the NEW name. The staged files sit outside
-    // every rename's fileKeys scope, so after the fold no mapping applies
-    // and the table's physical schema is uniform again — the escape hatch
-    // commitDelete/commitMerge name in their refusal. Zone-map columns
-    // follow the mapping (the manifest's stats header addresses the
-    // file's physical names, which post-fold are the logical ones).
-    val renamed = activeRenames(spark, dir, prev, entries)
-    val widened = activeWidens(spark, dir, prev, entries)
-    val dropped = activeDrops(spark, dir, prev, entries)
-    // an explicit override is already in LOGICAL names — only carried
-    // declarations need the rename-chain fold
+    // OPTIMIZE is the schema-change FOLD: while a rename, widen or drop
+    // is still active on live files, the rewrite reads THROUGH every
+    // mapping (each file group under its logical names and types — a raw
+    // multi-footer read would silently NULL or mis-type columns across
+    // mixed physical schemas) and stages every row under the logical
+    // schema. The staged files sit outside every change's fileKeys scope,
+    // so after the fold no mapping applies and the physical schema is
+    // uniform again — the escape hatch the rewrite commits name in their
+    // refusal. The deletion vector folds too (readVersion anti-joins it),
+    // so OPTIMIZE publishes with no read-time debt.
+    val active = activeSchemaChanges(spark, dir, prev, entries)
+    // zone-map columns follow the active rename chain (the stats header
+    // addresses the files' physical names, which post-fold are the
+    // logical ones); an explicit override is already in logical names
     val foldedStats =
-      if (renamed.isEmpty || statsColsOverride.isDefined) statsCols
-      else statsCols.map(c =>
-        renameLog(spark, dir).filter(_.version <= prev).foldLeft(c)((n, r) =>
-          if (r.from == n) r.to else n))
-    // the rewrite reads through EVERY mapping: the rename chain (fold,
-    // above), active type widenings (the evolved read casts them — the
-    // staged files are physically wide, so the widen's fileKeys scope no
-    // longer applies), and the deletion vector (readVersion anti-joins
-    // it) — the rewritten files hold only live rows under their logical
-    // names and types, so OPTIMIZE publishes with no read-time debt
+      if (statsColsOverride.isDefined) statsCols
+      else statsCols.map(c => active.foldLeft(c) {
+        case (n, r: ColumnRename) if r.from == n => r.to
+        case (n, _)                              => n
+      })
     val all =
-      if (renamed.isEmpty && widened.isEmpty && dropped.isEmpty) readVersion(spark, dir, prev)
+      if (active.isEmpty) readVersion(spark, dir, prev)
       else readVersionEvolved(spark, dir, prev)
     statsColsOverride.foreach(_.foreach(c =>
       require(all.columns.contains(c),
@@ -1382,35 +1363,14 @@ object Snapshots {
           && st.getModificationTime <= cutoffMs)
           f.delete(st.getPath, false)
       }
-    // PROVABLY dead rename entries (their claimed version's manifest
-    // exists and belongs to another commit) are reclaimed BEFORE the
-    // manifests proving them dead can be deleted below — after which a
-    // surviving entry with a missing manifest is always a validated one
-    // (the renameEntryLive contract). Entries whose version is still
-    // unpublished are left alone: an in-flight rename may be about to
-    // publish them (it rolls its own entry back on a lost race).
-    rawRenameEntries(spark, dir).foreach { r =>
-      val mf = new Path(manifestDir(dir), s"v${r.version}.list")
-      val provablyDead = r.version <= latest && f.exists(mf) &&
-        !(commitOp(spark, dir, r.version).contains("rename") &&
-          renameSeqOf(spark, dir, r.version).contains(r.seq))
-      if (provablyDead) f.delete(new Path(schemaDir(dir), s"rename-${r.seq}.list"), false)
-    }
-    // widen entries follow the identical liveness protocol
-    rawWidenEntries(spark, dir).foreach { w =>
-      val mf = new Path(manifestDir(dir), s"v${w.version}.list")
-      val provablyDead = w.version <= latest && f.exists(mf) &&
-        !(commitOp(spark, dir, w.version).contains("widen") &&
-          widenSeqOf(spark, dir, w.version).contains(w.seq))
-      if (provablyDead) f.delete(new Path(schemaDir(dir), s"widen-${w.seq}.list"), false)
-    }
-    // drop entries too
-    rawDropEntries(spark, dir).foreach { d =>
-      val mf = new Path(manifestDir(dir), s"v${d.version}.list")
-      val provablyDead = d.version <= latest && f.exists(mf) &&
-        !(commitOp(spark, dir, d.version).contains("drop") &&
-          dropSeqOf(spark, dir, d.version).contains(d.seq))
-      if (provablyDead) f.delete(new Path(schemaDir(dir), s"drop-${d.seq}.list"), false)
+    // PROVABLY dead schema-change entries are reclaimed BEFORE the
+    // manifests proving them dead can be deleted below (the
+    // [[SchemaChange]] liveness rule); pending ones are left alone — an
+    // in-flight change may be about to publish them (it rolls its own
+    // entry back on a lost race)
+    rawSchemaChanges(spark, dir).foreach { c =>
+      if (schemaChangeLive(spark, dir, latest, c).contains(false))
+        f.delete(schemaFile(dir, c.kind, c.seq), false)
     }
     (1 until keepFrom).filterNot(pinned).foreach(v =>
       f.delete(new Path(manifestDir(dir), s"v$v.list"), false))
@@ -1583,262 +1543,111 @@ object Snapshots {
       value: Any): DataFrame =
     readVersionPoint(spark, dir, latestVersion(spark, dir), column, value)
 
-  // ---- Named refs (tags) -------------------------------------------------
-
-  // ---- Column rename (metadata-only schema mapping) -----------------------
+  // ---- Schema changes (metadata-only rename / widen / drop) ---------------
 
   private def schemaDir(dir: String) = new Path(dir, "_schema")
-  private val RenameFileRe = "rename-(\\d+)\\.list".r
-  private val WidenFileRe = "widen-(\\d+)\\.list".r
-  private val DropFileRe = "drop-(\\d+)\\.list".r
+  private val SchemaFileRe = "(rename|widen|drop)-(\\d+)\\.list".r
+  private def schemaFile(dir: String, kind: String, seq: Int) =
+    new Path(schemaDir(dir), s"$kind-$seq.list")
+  private def seqHeader(kind: String) = s"#${kind}seq="
 
-  /** One recorded rename: applied at table `version`, mapping physical
-    * column `from` (as written in the files staged BEFORE the rename) to
-    * logical name `to`, scoped to exactly `fileKeys` — the files that
-    * carried the old physical name when the rename committed. Scoping by
-    * explicit file set (not "every file in manifests ≤ version") keeps
-    * the mapping correct after later OPTIMIZE/MERGE rewrites drop some
-    * of those files, and survives vacuuming of the rename-era manifests.
+  /** One recorded METADATA-ONLY schema change — the Delta/Iceberg
+    * column-mapping idea in file-set form. No data file is rewritten: the
+    * change is a table version of its own (op = its `kind`, the previous
+    * version's file list unchanged), and [[readVersionEvolved]] applies
+    * its `project`ion at read time to exactly `fileKeys` — the files that
+    * carried the old physical schema when it committed. Files staged
+    * later are written under the new schema and need no mapping; a read
+    * of a version before `version` never sees the change (schema time
+    * travel, the x11 discipline). Scoping by an explicit file set (not
+    * "every file in manifests <= version") keeps the mapping correct after
+    * OPTIMIZE/MERGE rewrites drop some of those files, and survives
+    * vacuuming of the change-era manifests.
+    *
+    * ENTRY FORMAT — `_schema/<kind>-<seq>.list`, seq counted per kind
+    * from 1:
+    * {{{
+    *   #crc=<CRC32 of every byte after this line>
+    *   #version=<the table version that publishes the change>
+    *   #<key>=<value>    one line per payload header, in `headers` order
+    *   <file key>        one line per data file (URI path) in scope
+    * }}}
+    * The publishing manifest names its entry with a `#<kind>seq=<seq>`
+    * header (`#renameseq=`, `#widenseq=`, `#dropseq=`).
+    *
+    * LIVENESS — the commit is two steps made atomic: the entry is claimed
+    * exclusively FIRST and is inert until the manifest naming it
+    * publishes. While its version is unpublished the entry is PENDING (a
+    * crashed or in-flight claim) and never applies. Once that manifest
+    * exists the entry is LIVE iff the manifest is an op=<kind> commit
+    * naming exactly its seq, and provably DEAD otherwise (another commit
+    * took the version; a writer that loses the publish race rolls its own
+    * entry back). [[vacuum]] deletes dead entries before it deletes the
+    * manifests proving them dead, so a surviving entry whose manifest was
+    * vacuumed was validated first and stays live.
+    *
+    * REFUSALS — a change is ACTIVE while some live file is in its scope.
+    * Delete and merge, copy-on-write and merge-on-read alike, refuse
+    * while ANY change is active: a raw multi-footer read would silently
+    * NULL a renamed or dropped column or mix physical types, and staged
+    * rewrites would escape the scope. Each evolution verb refuses while a
+    * change of ANOTHER kind is active (same-kind changes stack, e.g.
+    * rename chains), so no file is ever in the scope of two kinds. Every
+    * evolution also refuses over a live deletion vector (the grouped
+    * evolved read cannot thread the DV anti-join). [[commitOptimize]] is
+    * the fold that unblocks them all: it reads through every mapping and
+    * rewrites under the logical schema, after which nothing is active.
+    */
+  sealed trait SchemaChange {
+    def seq: Int
+    def version: Int
+    def fileKeys: Set[String]
+    /** `rename`, `widen` or `drop`: the entry-file prefix and the op of
+      * the publishing manifest.
+      */
+    def kind: String
+    /** The payload headers after `#version=`, in on-disk order. */
+    def headers: Seq[(String, String)]
+    /** The read-time mapping of one physical file group in scope. */
+    def project(df: DataFrame): DataFrame
+    /** What a refusal names while this change is active. */
+    def refusal: String
+  }
+
+  /** `from` (the physical name) reads as `to`; renames chain (a→b then
+    * b→c resolves through both).
     */
   final case class ColumnRename(seq: Int, version: Int, from: String, to: String, fileKeys: Set[String])
-
-  /** Metadata-only COLUMN RENAME — the Delta/Iceberg column-mapping
-    * idea in file-set form: no data file is rewritten; a rename entry
-    * (old name, new name, the CURRENT snapshot's file set) publishes
-    * atomically under `_schema/`, and [[readVersionRenamed]] applies it
-    * at read time to exactly those files. Files staged AFTER the rename
-    * are written with the new logical name and need no mapping; a read
-    * of a version BEFORE the rename sees the old name, forever — schema
-    * time travel, the x11 discipline. Renames chain (a→b then b→c
-    * resolves through both). Returns the rename's table version (the
-    * version whose readers first see the new name).
-    *
-    * Contract notes: zone-map declarations keep the PHYSICAL name (the
-    * manifest's stats header addresses what is in the files — range
-    * reads use the declared name); the copy-on-write commits
-    * (delete/merge) REFUSE while a rename mapping is active on live
-    * files (enforced — a raw multi-footer read would silently NULL the
-    * renamed column), and [[commitOptimize]] is the FOLD: it reads
-    * through the mapping and rewrites every file under the new physical
-    * name, after which the rewrite commits are legal again — the same
-    * "unify physical schemas first" contract Delta documents for tables
-    * without field-id mapping, made loud instead of latent.
-    */
-  def commitRename(spark: SparkSession, dir: String, from: String, to: String): Int = {
-    require(from != to, s"rename of '$from' onto itself")
-    val v0 = latestVersion(spark, dir)
-    require(v0 >= 1, s"cannot rename a column of an empty table at $dir")
-    // a live deletion vector and an active rename mapping must never
-    // coexist (the grouped rename read cannot also thread the DV
-    // anti-join) — fold deletes first, then rename
-    requireNoLiveDv(spark, dir, v0, "RENAME")
-    // validate against the current LOGICAL schema (prior renames applied)
-    val cur = readVersionRenamed(spark, dir, v0).schema.fieldNames.toSet
-    require(cur.contains(from), s"column '$from' does not exist in snapshot v$v0 of $dir (have: $cur)")
-    require(!cur.contains(to), s"column '$to' already exists in snapshot v$v0 of $dir")
-    // ATOMICITY (the r11 two-step hazard): the mapping entry is claimed
-    // FIRST, but it is INERT until the op=rename manifest that names its
-    // seq publishes — renameLog only applies an entry whose version's
-    // manifest is op=rename with a matching #renameseq header, so the
-    // version and the mapping become visible in ONE atomic step (the
-    // manifest claim). A crash between the two steps leaves a dead entry
-    // no reader ever applies (an append landing at the same version makes
-    // it provably dead; vacuum reclaims dead entries before it deletes
-    // the manifests that prove them dead). A lost manifest publish rolls
-    // the claimed entry back and aborts — rerun against the new latest.
-    val (statsCols0, entries0) = manifest(spark, dir, v0)
-    // a rename and a widening must not be simultaneously active on live
-    // files (the grouped read handles it, but the OPTIMIZE fold and the
-    // rewrite refusals reason about ONE mapping kind at a time) — fold
-    // first, then evolve again
-    requireNoActiveWiden(spark, dir, v0, entries0, "RENAME")
-    requireNoActiveDrop(spark, dir, v0, entries0, "RENAME")
-    val v = v0 + 1
-    val files = entries0.map(e => fileKey(e.path))
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    f.mkdirs(sd)
-    var seq = rawRenameEntries(spark, dir).map(_.seq).foldLeft(0)(math.max) + 1
-    var claimed = false
-    while (!claimed) {
-      val payload = s"#version=$v\n#from=$from\n#to=$to\n" + files.mkString("", "\n", "\n")
-      val tmp = new Path(sd, s"rename-$seq.list.tmp-${java.util.UUID.randomUUID()}")
-      val out = f.create(tmp, true)
-      try out.write((s"$CrcHeader${crc32Of(payload)}\n" + payload).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      claimed = claimExclusive(f, tmp, new Path(sd, s"rename-$seq.list"))
-      f.delete(tmp, false)
-      if (!claimed) seq += 1 // lost a race to a concurrent rename: take the next slot
-    }
-    // the rename IS a table version (op=rename, identical file list):
-    // readers of versions BELOW it keep the old name forever (schema
-    // time travel), and the table history shows the schema change
-    if (!tryPublish(spark, dir, v, statsCols0, entries0, None, "rename",
-        s"$RenameSeqHeader$seq\n")) {
-      f.delete(new Path(sd, s"rename-$seq.list"), false) // roll back the inert entry
-      throw new IllegalArgumentException(
-        s"commit of v$v lost the publish race to a concurrent writer; " +
-          "re-run the operation against the new latest snapshot")
-    }
-    v
+      extends SchemaChange {
+    def kind: String = "rename"
+    def headers: Seq[(String, String)] = Seq("from" -> from, "to" -> to)
+    def project(df: DataFrame): DataFrame =
+      if (df.columns.contains(from)) df.withColumnRenamed(from, to) else df
+    def refusal: String =
+      s"column rename '$from'->'$to' (a raw rewrite would silently NULL the renamed column)"
   }
 
-  /** The `#renameseq=` header of `version`'s manifest, None when absent. */
-  private def renameSeqOf(spark: SparkSession, dir: String, version: Int): Option[Int] =
-    manifestLines(spark, dir, version)
-      .find(_.startsWith(RenameSeqHeader))
-      .map(_.drop(RenameSeqHeader.length).toInt)
-
-  /** Whether a recorded rename entry is LIVE — its version's manifest is
-    * an op=rename commit naming exactly this entry's seq. An entry whose
-    * version is not yet published is pending (a crashed rename's claim or
-    * an in-flight one) and must not apply; an entry whose version's
-    * manifest exists with a different op/seq is provably DEAD (the
-    * claimed version went to another commit). A validated entry whose
-    * manifest was later vacuumed stays live: [[vacuum]] deletes the dead
-    * entries FIRST, while the manifests proving them dead still exist, so
-    * a surviving entry with a missing manifest was necessarily validated.
-    */
-  private def renameEntryLive(spark: SparkSession, dir: String, r: ColumnRename): Boolean = {
-    if (r.version > latestVersion(spark, dir)) return false
-    val mf = new Path(manifestDir(dir), s"v${r.version}.list")
-    if (!fs(spark, mf).exists(mf)) return true // vacuumed after validation
-    commitOp(spark, dir, r.version).contains("rename") &&
-    renameSeqOf(spark, dir, r.version).contains(r.seq)
-  }
-
-  /** The LIVE recorded renames in application order: raw entries filtered
-    * through [[renameEntryLive]] — a claimed-but-never-published (or
-    * published-to-another-commit) entry never reaches a reader.
-    */
-  def renameLog(spark: SparkSession, dir: String): Seq[ColumnRename] =
-    rawRenameEntries(spark, dir).filter(renameEntryLive(spark, dir, _))
-
-  /** Every parseable rename entry, live or not (CRC-checked). */
-  private def rawRenameEntries(spark: SparkSession, dir: String): Seq[ColumnRename] = {
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    if (!f.exists(sd)) Nil
-    else
-      f.listStatus(sd)
-        .flatMap { st =>
-          st.getPath.getName match {
-            case RenameFileRe(seq) =>
-              val in = f.open(st.getPath)
-              val content =
-                try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-              require(content.startsWith(CrcHeader), s"rename entry $seq on $dir is malformed")
-              val nl = content.indexOf('\n')
-              val declared = content.substring(CrcHeader.length, nl).toLong
-              val body = content.substring(nl + 1)
-              require(crc32Of(body) == declared,
-                s"rename entry $seq on $dir failed its CRC check: metadata corruption")
-              val lines = body.linesIterator.toList
-              def hdr(k: String) =
-                lines.find(_.startsWith(s"#$k=")).map(_.drop(k.length + 2)).getOrElse(
-                  throw new IllegalArgumentException(s"rename entry $seq on $dir lacks #$k="))
-              Some(ColumnRename(
-                seq.toInt,
-                hdr("version").toInt,
-                hdr("from"),
-                hdr("to"),
-                lines.filterNot(_.startsWith("#")).toSet))
-            case _ => None
-          }
-        }
-        .sortBy(_.seq)
-        .toSeq
-  }
-
-  /** Read `version` with the recorded column renames applied — the
-    * rename-aware twin of [[readVersion]]. Files are grouped by WHICH
-    * renames apply to them (a handful of generations, never O(files)
-    * groups in practice — each rename splits the set once), each group
-    * scans with its chain of `withColumnRenamed` (plan-only — the
-    * parquet scan and its pruning/pushdown are untouched), and the
-    * groups union BY NAME, so post-rename readers see one coherent
-    * logical schema over physically mixed files. Renames recorded at a
-    * version AFTER the one being read do not apply — reading v1 of a
-    * table renamed at v2 still sees the old name (schema time travel).
-    */
-  def readVersionRenamed(spark: SparkSession, dir: String, version: Int): DataFrame =
-    readVersionEvolved(spark, dir, version)
-
-  /** Read `version` with EVERY recorded metadata-only schema evolution
-    * applied — column renames AND type widenings. Files are grouped by
-    * WHICH evolution entries apply to them (a handful of generations,
-    * never O(files) groups — each entry splits the set once), each
-    * group scans with its chain of `withColumnRenamed` / `cast`
-    * (plan-only — the parquet scan and its pruning/pushdown are
-    * untouched; an int→long cast on top of the scan is a projection,
-    * not a rewrite), and the groups union BY NAME, so readers see one
-    * coherent logical schema over physically mixed files. Entries
-    * recorded at a version AFTER the one being read do not apply —
-    * reading v1 of a table widened at v2 still sees the narrow type
-    * (schema time travel, the x11/x21 discipline). The commit-time
-    * mutual refusal ([[commitRename]] vs [[commitWiden]]) guarantees no
-    * single version's file set carries BOTH mapping kinds, but the
-    * grouped read handles the general case anyway — it is the one read
-    * path for every evolved table.
-    */
-  def readVersionEvolved(spark: SparkSession, dir: String, version: Int): DataFrame = {
-    val renames = renameLog(spark, dir).filter(_.version <= version)
-    val widens = widenLog(spark, dir).filter(_.version <= version)
-    val drops = dropLog(spark, dir).filter(_.version <= version)
-    val entries = manifest(spark, dir, version)._2
-    val files = entries.map(_.path)
-    // when no recorded evolution touches any live file (none recorded,
-    // or all folded by OPTIMIZE), the evolved read IS the plain
-    // (deletion-vector-aware) read; the grouped path below never
-    // coexists with a live DV (the evolution commits enforce it)
-    val applicable =
-      renames.exists(r => files.exists(p => r.fileKeys.contains(fileKey(p)))) ||
-        widens.exists(w => files.exists(p => w.fileKeys.contains(fileKey(p)))) ||
-        drops.exists(d => files.exists(p => d.fileKeys.contains(fileKey(p))))
-    if (!applicable) readVersion(spark, dir, version)
-    else {
-      requireNoLiveDv(spark, dir, version, "EVOLVED READ")
-      val groups = files.groupBy(p =>
-        (renames.map(_.fileKeys.contains(fileKey(p))),
-          widens.map(_.fileKeys.contains(fileKey(p))),
-          drops.map(_.fileKeys.contains(fileKey(p)))))
-      groups.values.toSeq
-        .map { fsGroup =>
-          val base = spark.read.parquet(fsGroup: _*)
-          val key = fileKey(fsGroup.head)
-          val renamed = renames.foldLeft(base) {
-            case (df, r) if r.fileKeys.contains(key) && df.columns.contains(r.from) =>
-              df.withColumnRenamed(r.from, r.to)
-            case (df, _) => df
-          }
-          val widened = widens.foldLeft(renamed) {
-            case (df, w) if w.fileKeys.contains(key) && df.columns.contains(w.column) =>
-              df.withColumn(w.column, col(w.column).cast(w.to))
-            case (df, _) => df
-          }
-          drops.foldLeft(widened) {
-            case (df, d) if d.fileKeys.contains(key) && df.columns.contains(d.column) =>
-              df.drop(d.column)
-            case (df, _) => df
-          }
-        }
-        .reduce(_.unionByName(_))
-    }
-  }
-
-  /** Read the latest snapshot with renames applied. */
-  def readLatestRenamed(spark: SparkSession, dir: String): DataFrame =
-    readVersionRenamed(spark, dir, latestVersion(spark, dir))
-
-  // ---- Type widening (metadata-only schema evolution) ---------------------
-
-  /** A recorded type widening: `column`'s physical type in `fileKeys`
-    * is `from`; readers of any version at/after `version` see it cast
-    * to `to`. Scoped to the file set exactly like [[ColumnRename]].
-    */
+  /** `column`, physically `from`, reads cast to `to`. */
   final case class ColumnWiden(
       seq: Int, version: Int, column: String, from: String, to: String, fileKeys: Set[String])
+      extends SchemaChange {
+    def kind: String = "widen"
+    def headers: Seq[(String, String)] = Seq("column" -> column, "from" -> from, "to" -> to)
+    def project(df: DataFrame): DataFrame =
+      if (df.columns.contains(column)) df.withColumn(column, col(column).cast(to)) else df
+    def refusal: String =
+      s"type widening '$column' $from->$to (a raw rewrite would read mixed physical types)"
+  }
+
+  /** `column` stays physically present but is projected away. */
+  final case class ColumnDrop(seq: Int, version: Int, column: String, fileKeys: Set[String])
+      extends SchemaChange {
+    def kind: String = "drop"
+    def headers: Seq[(String, String)] = Seq("column" -> column)
+    def project(df: DataFrame): DataFrame = df.drop(column)
+    def refusal: String =
+      s"column drop '$column' (a raw rewrite would resurrect it as NULLs)"
+  }
 
   /** The widenings this implementation admits: value-preserving casts
     * whose wide type can also hold every future append (the
@@ -1847,67 +1656,85 @@ object Snapshots {
     */
   private val AllowedWidenings = Set(("integer", "long"), ("float", "double"))
 
-  /** Metadata-only TYPE WIDENING — the second schema-evolution verb
-    * (Delta's `ALTER COLUMN ... TYPE`, Iceberg's type promotion) in the
-    * same file-set form as [[commitRename]]: no data file is rewritten;
-    * a widen entry (column, narrow type, wide type, the CURRENT
-    * snapshot's file set) publishes atomically under `_schema/`, and
-    * [[readVersionEvolved]] applies it at read time as a cast on
-    * exactly those files. Files staged AFTER the widen are written with
-    * the wide type natively and need no mapping; a read of a version
-    * BEFORE the widen sees the narrow type, forever (schema time
-    * travel). Returns the widen's table version.
-    *
-    * The same liveness protocol as renames makes the two-step commit
-    * atomic: the `_schema/widen-N.list` entry is claimed FIRST but is
-    * INERT until the op=widen manifest naming its seq publishes; a
-    * crash between the steps leaves a dead entry no reader applies, and
-    * [[vacuum]] reclaims provably dead ones. The copy-on-write commits
-    * (delete/merge/MOR delete) REFUSE while a widen mapping is active
-    * on live files — their raw multi-footer reads would fail (or
-    * silently coerce) across int/long generations — and
-    * [[commitOptimize]] is the FOLD: it reads through the mapping and
-    * rewrites every file under the wide type. Renames and widens
-    * mutually refuse while the other is active on live files; fold
-    * first, then evolve again.
+  /** Metadata-only COLUMN RENAME (x21). Validates against the current
+    * logical schema (prior changes applied). Zone-map declarations keep
+    * the PHYSICAL name until [[commitOptimize]] folds the rename. Returns
+    * the rename's table version (the first whose readers see `to`). The
+    * protocol is [[SchemaChange]]'s.
     */
-  def commitWiden(spark: SparkSession, dir: String, column: String, to: String): Int = {
+  def commitRename(spark: SparkSession, dir: String, from: String, to: String): Int = {
+    require(from != to, s"rename of '$from' onto itself")
+    commitSchemaChange(spark, dir, "RENAME") { (cur, _) =>
+      val have = cur.fieldNames.toSet
+      require(have.contains(from), s"column '$from' does not exist in $dir (have: $have)")
+      require(!have.contains(to), s"column '$to' already exists in $dir")
+      ColumnRename(_, _, from, to, _)
+    }
+  }
+
+  /** Metadata-only TYPE WIDENING (x24; Delta's `ALTER COLUMN ... TYPE`,
+    * Iceberg's type promotion) of `column` to `to`, one of
+    * [[AllowedWidenings]]. Files staged later are natively wide. Returns
+    * the widen's table version. The protocol is [[SchemaChange]]'s.
+    */
+  def commitWiden(spark: SparkSession, dir: String, column: String, to: String): Int =
+    commitSchemaChange(spark, dir, "WIDEN") { (cur, _) =>
+      val from = cur.fields.find(_.name == column).map(_.dataType.typeName).getOrElse(
+        throw new IllegalArgumentException(
+          s"column '$column' does not exist in $dir (have: ${cur.fieldNames.mkString(", ")})"))
+      require(AllowedWidenings.contains((from, to)),
+        s"widening '$column' from $from to $to is not value-preserving " +
+          s"(allowed: ${AllowedWidenings.map { case (f, t) => s"$f->$t" }.mkString(", ")})")
+      ColumnWiden(_, _, column, from, to, _)
+    }
+
+  /** Metadata-only DROP COLUMN (x25). The dropped data is not erased
+    * until OPTIMIZE rewrites or vacuum expires the files — the erasure
+    * split every manifest-based format documents. A zone-map stats
+    * column refuses to drop (every manifest entry's range metadata
+    * addresses it): re-declare stats through OPTIMIZE first. Returns the
+    * drop's table version. The protocol is [[SchemaChange]]'s.
+    */
+  def commitDropColumn(spark: SparkSession, dir: String, column: String): Int =
+    commitSchemaChange(spark, dir, "DROP COLUMN") { (cur, statsCols) =>
+      require(!statsCols.contains(column),
+        s"cannot drop zone-map stats column '$column' of $dir — its range metadata lives in " +
+          "every manifest entry; rewrite with different statsCols first")
+      require(cur.fieldNames.contains(column),
+        s"column '$column' does not exist in $dir (have: ${cur.fieldNames.mkString(", ")})")
+      require(cur.size >= 2, s"cannot drop the last column of $dir")
+      ColumnDrop(_, _, column, _)
+    }
+
+  /** The one commit path of every [[SchemaChange]]: `validate` sees the
+    * latest logical schema and zone-map columns, refuses bad input, and
+    * returns the change's constructor over (seq, version, fileKeys); the
+    * entry is claimed at its kind's next free seq, then published by the
+    * manifest that names it. A lost publish rolls the inert entry back
+    * and aborts — rerun against the new latest. Returns the new version.
+    */
+  private def commitSchemaChange(spark: SparkSession, dir: String, op: String)(
+      validate: (StructType, Seq[String]) => (Int, Int, Set[String]) => SchemaChange): Int = {
     val v0 = latestVersion(spark, dir)
-    require(v0 >= 1, s"cannot widen a column of an empty table at $dir")
-    requireNoLiveDv(spark, dir, v0, "WIDEN")
+    require(v0 >= 1, s"$op on $dir refused: the table is empty")
+    requireNoLiveDv(spark, dir, v0, op)
     val (statsCols0, entries0) = manifest(spark, dir, v0)
-    requireNoActiveRename(spark, dir, v0, entries0, "WIDEN")
-    requireNoActiveDrop(spark, dir, v0, entries0, "WIDEN")
-    val cur = readVersionEvolved(spark, dir, v0).schema
-    val field = cur.fields.find(_.name == column).getOrElse(
-      throw new IllegalArgumentException(
-        s"column '$column' does not exist in snapshot v$v0 of $dir " +
-          s"(have: ${cur.fieldNames.mkString(", ")})"))
-    val from = field.dataType.typeName
-    require(AllowedWidenings.contains((from, to)),
-      s"widening '$column' from $from to $to is not value-preserving " +
-        s"(allowed: ${AllowedWidenings.map { case (f, t) => s"$f->$t" }.mkString(", ")})")
     val v = v0 + 1
     val files = entries0.map(e => fileKey(e.path))
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    f.mkdirs(sd)
-    var seq = rawWidenEntries(spark, dir).map(_.seq).foldLeft(0)(math.max) + 1
-    var claimed = false
-    while (!claimed) {
-      val payload = s"#version=$v\n#column=$column\n#from=$from\n#to=$to\n" +
-        files.mkString("", "\n", "\n")
-      val tmp = new Path(sd, s"widen-$seq.list.tmp-${java.util.UUID.randomUUID()}")
-      val out = f.create(tmp, true)
-      try out.write((s"$CrcHeader${crc32Of(payload)}\n" + payload).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      claimed = claimExclusive(f, tmp, new Path(sd, s"widen-$seq.list"))
-      f.delete(tmp, false)
-      if (!claimed) seq += 1 // lost a race to a concurrent widen: take the next slot
-    }
-    if (!tryPublish(spark, dir, v, statsCols0, entries0, None, "widen",
-        s"$WidenSeqHeader$seq\n")) {
-      f.delete(new Path(sd, s"widen-$seq.list"), false) // roll back the inert entry
+    // built at seq 0: the payload never carries the seq (the claim below picks it)
+    val change = validate(readVersionEvolved(spark, dir, v0).schema, statsCols0)(0, v, files.toSet)
+    requireNoActiveSchemaChange(spark, dir, v0, entries0, op, allow = Some(change.kind))
+    val payload = s"#version=$v\n" +
+      change.headers.map { case (k, x) => s"#$k=$x\n" }.mkString + files.mkString("", "\n", "\n")
+    val f = fs(spark, schemaDir(dir))
+    f.mkdirs(schemaDir(dir))
+    var seq = rawSchemaChanges(spark, dir).filter(_.kind == change.kind).map(_.seq)
+      .foldLeft(0)(math.max) + 1
+    // a lost claim means a concurrent change of this kind took the slot
+    while (!claimChecked(f, schemaFile(dir, change.kind, seq), payload)) seq += 1
+    if (!tryPublish(spark, dir, v, statsCols0, entries0, None, change.kind,
+        s"${seqHeader(change.kind)}$seq\n")) {
+      f.delete(schemaFile(dir, change.kind, seq), false) // roll back the inert entry
       throw new IllegalArgumentException(
         s"commit of v$v lost the publish race to a concurrent writer; " +
           "re-run the operation against the new latest snapshot")
@@ -1915,235 +1742,134 @@ object Snapshots {
     v
   }
 
-  /** The `#widenseq=` header of `version`'s manifest, None when absent. */
-  private def widenSeqOf(spark: SparkSession, dir: String, version: Int): Option[Int] =
-    manifestLines(spark, dir, version)
-      .find(_.startsWith(WidenSeqHeader))
-      .map(_.drop(WidenSeqHeader.length).toInt)
-
-  /** [[renameEntryLive]]'s widen twin — same claim/publish liveness. */
-  private def widenEntryLive(spark: SparkSession, dir: String, w: ColumnWiden): Boolean = {
-    if (w.version > latestVersion(spark, dir)) return false
-    val mf = new Path(manifestDir(dir), s"v${w.version}.list")
-    if (!fs(spark, mf).exists(mf)) return true // vacuumed after validation
-    commitOp(spark, dir, w.version).contains("widen") &&
-    widenSeqOf(spark, dir, w.version).contains(w.seq)
-  }
-
-  /** The LIVE recorded widenings in application order. */
-  def widenLog(spark: SparkSession, dir: String): Seq[ColumnWiden] =
-    rawWidenEntries(spark, dir).filter(widenEntryLive(spark, dir, _))
-
-  /** Every parseable widen entry, live or not (CRC-checked). */
-  private def rawWidenEntries(spark: SparkSession, dir: String): Seq[ColumnWiden] = {
+  /** Every parseable schema-change entry, live or not (CRC-checked). */
+  private def rawSchemaChanges(spark: SparkSession, dir: String): Seq[SchemaChange] = {
     val sd = schemaDir(dir)
     val f = fs(spark, sd)
     if (!f.exists(sd)) Nil
     else
-      f.listStatus(sd)
-        .flatMap { st =>
-          st.getPath.getName match {
-            case WidenFileRe(seq) =>
-              val in = f.open(st.getPath)
-              val content =
-                try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-              require(content.startsWith(CrcHeader), s"widen entry $seq on $dir is malformed")
-              val nl = content.indexOf('\n')
-              val declared = content.substring(CrcHeader.length, nl).toLong
-              val body = content.substring(nl + 1)
-              require(crc32Of(body) == declared,
-                s"widen entry $seq on $dir failed its CRC check: metadata corruption")
-              val lines = body.linesIterator.toList
-              def hdr(k: String) =
-                lines.find(_.startsWith(s"#$k=")).map(_.drop(k.length + 2)).getOrElse(
-                  throw new IllegalArgumentException(s"widen entry $seq on $dir lacks #$k="))
-              Some(ColumnWiden(
-                seq.toInt,
-                hdr("version").toInt,
-                hdr("column"),
-                hdr("from"),
-                hdr("to"),
-                lines.filterNot(_.startsWith("#")).toSet))
-            case _ => None
-          }
+      f.listStatus(sd).toSeq.flatMap { st =>
+        st.getPath.getName match {
+          // full-match: a crashed claim's `<kind>-<seq>.list.tmp-<uuid>`
+          // never parses as an entry
+          case SchemaFileRe(kind, seqStr) =>
+            val what = s"$kind entry $seqStr on $dir"
+            val lines = readChecked(f, st.getPath, what).linesIterator.toList
+            def hdr(k: String) =
+              lines.find(_.startsWith(s"#$k=")).map(_.drop(k.length + 2)).getOrElse(
+                throw new IllegalArgumentException(s"$what lacks #$k="))
+            val (seq, version) = (seqStr.toInt, hdr("version").toInt)
+            val keys = lines.filterNot(_.startsWith("#")).toSet
+            Some(kind match {
+              case "rename" => ColumnRename(seq, version, hdr("from"), hdr("to"), keys)
+              case "widen"  => ColumnWiden(seq, version, hdr("column"), hdr("from"), hdr("to"), keys)
+              case _        => ColumnDrop(seq, version, hdr("column"), keys)
+            })
+          case _ => None
         }
-        .sortBy(_.seq)
-        .toSeq
+      }
   }
 
-  /** Widenings whose mapping is still ACTIVE on `entries` — some live
-    * file is physically narrow. The rewrite commits and
-    * [[commitRename]] refuse while one is active (mirror of
-    * [[activeRenames]]).
+  /** `c`'s standing under the [[SchemaChange]] liveness rule, reading its
+    * version's manifest once: None while PENDING (version > `latest`),
+    * else whether it is LIVE rather than provably DEAD.
     */
-  private def activeWidens(
+  private def schemaChangeLive(
+      spark: SparkSession,
+      dir: String,
+      latest: Int,
+      c: SchemaChange): Option[Boolean] =
+    if (c.version > latest) None
+    else {
+      val mf = new Path(manifestDir(dir), s"v${c.version}.list")
+      if (!fs(spark, mf).exists(mf)) Some(true) // vacuumed after validation
+      else {
+        val lines = manifestLines(spark, dir, c.version)
+        def header(h: String) = lines.find(_.startsWith(h)).map(_.drop(h.length))
+        Some(header(OpHeader).contains(c.kind) &&
+          header(seqHeader(c.kind)).contains(c.seq.toString))
+      }
+    }
+
+  /** The LIVE schema changes of every kind in application (version)
+    * order — a pending or dead entry never reaches a reader. Live
+    * versions are distinct (a manifest names one entry), so the order is
+    * total.
+    */
+  def schemaLog(spark: SparkSession, dir: String): Seq[SchemaChange] = {
+    val latest = latestVersion(spark, dir)
+    rawSchemaChanges(spark, dir)
+      .filter(schemaChangeLive(spark, dir, latest, _).contains(true))
+      .sortBy(_.version)
+  }
+
+  /** The live changes recorded by `version` that are still ACTIVE on
+    * `entries` (some listed file is in their scope).
+    */
+  private def activeSchemaChanges(
       spark: SparkSession,
       dir: String,
       version: Int,
-      entries: Seq[ManifestEntry]): Seq[ColumnWiden] =
-    widenLog(spark, dir).filter(w =>
-      w.version <= version && entries.exists(e => w.fileKeys.contains(fileKey(e.path))))
+      entries: Seq[ManifestEntry]): Seq[SchemaChange] = {
+    val keys = entries.map(e => fileKey(e.path)).toSet
+    schemaLog(spark, dir).filter(c => c.version <= version && c.fileKeys.exists(keys))
+  }
 
-  private def requireNoActiveWiden(
+  /** Refuse `op` while a schema change other than the `allow`ed kind is
+    * active on `entries`, naming each and the fold that clears it.
+    */
+  private def requireNoActiveSchemaChange(
       spark: SparkSession,
       dir: String,
       version: Int,
       entries: Seq[ManifestEntry],
-      op: String): Unit = {
-    val active = activeWidens(spark, dir, version, entries)
+      op: String,
+      allow: Option[String] = None): Unit = {
+    val active = activeSchemaChanges(spark, dir, version, entries).filterNot(c => allow.contains(c.kind))
     require(active.isEmpty,
-      s"$op on $dir refused: type widenings ${active.map(w => s"'${w.column}' ${w.from}->${w.to}").mkString(", ")} " +
-        "are still active on live files (a raw rewrite would read mixed physical types) — " +
-        "run commitOptimize first to fold the widening into a uniform physical schema")
+      s"$op on $dir refused: ${active.map(_.refusal).mkString(", ")} still active on live " +
+        "files — run commitOptimize first to fold them into a uniform physical schema")
   }
 
-  // ---- Column drop (metadata-only schema evolution) -----------------------
+  /** [[readVersionEvolved]] under its historical name. */
+  def readVersionRenamed(spark: SparkSession, dir: String, version: Int): DataFrame =
+    readVersionEvolved(spark, dir, version)
 
-  /** A recorded column drop: `column` is physically present in
-    * `fileKeys` but invisible to readers of any version at/after
-    * `version`. Scoped to the file set exactly like [[ColumnRename]].
+  /** Read `version` with every [[SchemaChange]] recorded by it applied.
+    * Files are grouped by WHICH changes apply to them (a handful of
+    * generations, never O(files) groups — each change splits the set
+    * once); each group scans with its changes' projections in version
+    * order (plan-only — the parquet scan and its pruning/pushdown are
+    * untouched; a cast on top of the scan is a projection, not a
+    * rewrite), and the groups union BY NAME, so readers see one coherent
+    * logical schema over physically mixed files. With no change in scope
+    * of any listed file this IS [[readVersion]] (deletion-vector-aware);
+    * the grouped path never meets a live vector (the evolution commits
+    * refuse one).
     */
-  final case class ColumnDrop(seq: Int, version: Int, column: String, fileKeys: Set[String])
-
-  /** Metadata-only DROP COLUMN — the third schema-evolution verb
-    * (add = x3's append-time union, rename = x21, widen = x24) in the
-    * same file-set form: no data file is rewritten; a drop entry
-    * (column, the CURRENT snapshot's file set) publishes atomically
-    * under `_schema/`, and [[readVersionEvolved]] projects the column
-    * away from exactly those files at read time. Files staged AFTER the
-    * drop are written without the column; a read of a version BEFORE
-    * the drop still sees it (schema time travel — the dropped data is
-    * not erased until OPTIMIZE rewrites or vacuum expires the files,
-    * the same erasure split every manifest-based format documents).
-    * Returns the drop's table version.
-    *
-    * Same liveness protocol and refusal discipline as rename/widen: the
-    * entry is inert until the op=drop manifest naming its seq
-    * publishes; rewrite commits refuse while a drop is active on live
-    * files (a raw rewrite would resurrect the column as NULLs across
-    * mixed physical schemas); OPTIMIZE is the fold; drops, renames, and
-    * widenings mutually refuse while another kind is active. A zone-map
-    * stats column refuses to drop (the manifest's range metadata
-    * addresses it) — re-declare stats first.
-    */
-  def commitDropColumn(spark: SparkSession, dir: String, column: String): Int = {
-    val v0 = latestVersion(spark, dir)
-    require(v0 >= 1, s"cannot drop a column of an empty table at $dir")
-    requireNoLiveDv(spark, dir, v0, "DROP COLUMN")
-    val (statsCols0, entries0) = manifest(spark, dir, v0)
-    requireNoActiveRename(spark, dir, v0, entries0, "DROP COLUMN")
-    requireNoActiveWiden(spark, dir, v0, entries0, "DROP COLUMN")
-    require(!statsCols0.contains(column),
-      s"cannot drop zone-map stats column '$column' of $dir — its range metadata lives in " +
-        "every manifest entry; rewrite with different statsCols first")
-    val cur = readVersionEvolved(spark, dir, v0).schema.fieldNames.toSeq
-    require(cur.contains(column),
-      s"column '$column' does not exist in snapshot v$v0 of $dir (have: ${cur.mkString(", ")})")
-    require(cur.size >= 2, s"cannot drop the last column of $dir")
-    val v = v0 + 1
-    val files = entries0.map(e => fileKey(e.path))
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    f.mkdirs(sd)
-    var seq = rawDropEntries(spark, dir).map(_.seq).foldLeft(0)(math.max) + 1
-    var claimed = false
-    while (!claimed) {
-      val payload = s"#version=$v\n#column=$column\n" + files.mkString("", "\n", "\n")
-      val tmp = new Path(sd, s"drop-$seq.list.tmp-${java.util.UUID.randomUUID()}")
-      val out = f.create(tmp, true)
-      try out.write((s"$CrcHeader${crc32Of(payload)}\n" + payload).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      claimed = claimExclusive(f, tmp, new Path(sd, s"drop-$seq.list"))
-      f.delete(tmp, false)
-      if (!claimed) seq += 1
+  def readVersionEvolved(spark: SparkSession, dir: String, version: Int): DataFrame = {
+    val log = schemaLog(spark, dir).filter(_.version <= version).toIndexedSeq
+    val files = manifest(spark, dir, version)._2.map(_.path)
+    val groups = files.groupBy { p =>
+      val k = fileKey(p)
+      log.indices.filter(log(_).fileKeys.contains(k))
     }
-    if (!tryPublish(spark, dir, v, statsCols0, entries0, None, "drop",
-        s"$DropSeqHeader$seq\n")) {
-      f.delete(new Path(sd, s"drop-$seq.list"), false) // roll back the inert entry
-      throw new IllegalArgumentException(
-        s"commit of v$v lost the publish race to a concurrent writer; " +
-          "re-run the operation against the new latest snapshot")
-    }
-    v
-  }
-
-  /** The `#dropseq=` header of `version`'s manifest, None when absent. */
-  private def dropSeqOf(spark: SparkSession, dir: String, version: Int): Option[Int] =
-    manifestLines(spark, dir, version)
-      .find(_.startsWith(DropSeqHeader))
-      .map(_.drop(DropSeqHeader.length).toInt)
-
-  /** [[renameEntryLive]]'s drop twin — same claim/publish liveness. */
-  private def dropEntryLive(spark: SparkSession, dir: String, d: ColumnDrop): Boolean = {
-    if (d.version > latestVersion(spark, dir)) return false
-    val mf = new Path(manifestDir(dir), s"v${d.version}.list")
-    if (!fs(spark, mf).exists(mf)) return true // vacuumed after validation
-    commitOp(spark, dir, d.version).contains("drop") &&
-    dropSeqOf(spark, dir, d.version).contains(d.seq)
-  }
-
-  /** The LIVE recorded drops in application order. */
-  def dropLog(spark: SparkSession, dir: String): Seq[ColumnDrop] =
-    rawDropEntries(spark, dir).filter(dropEntryLive(spark, dir, _))
-
-  /** Every parseable drop entry, live or not (CRC-checked). */
-  private def rawDropEntries(spark: SparkSession, dir: String): Seq[ColumnDrop] = {
-    val sd = schemaDir(dir)
-    val f = fs(spark, sd)
-    if (!f.exists(sd)) Nil
-    else
-      f.listStatus(sd)
-        .flatMap { st =>
-          st.getPath.getName match {
-            case DropFileRe(seq) =>
-              val in = f.open(st.getPath)
-              val content =
-                try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-              require(content.startsWith(CrcHeader), s"drop entry $seq on $dir is malformed")
-              val nl = content.indexOf('\n')
-              val declared = content.substring(CrcHeader.length, nl).toLong
-              val body = content.substring(nl + 1)
-              require(crc32Of(body) == declared,
-                s"drop entry $seq on $dir failed its CRC check: metadata corruption")
-              val lines = body.linesIterator.toList
-              def hdr(k: String) =
-                lines.find(_.startsWith(s"#$k=")).map(_.drop(k.length + 2)).getOrElse(
-                  throw new IllegalArgumentException(s"drop entry $seq on $dir lacks #$k="))
-              Some(ColumnDrop(
-                seq.toInt,
-                hdr("version").toInt,
-                hdr("column"),
-                lines.filterNot(_.startsWith("#")).toSet))
-            case _ => None
-          }
+    if (groups.keys.forall(_.isEmpty)) readVersion(spark, dir, version)
+    else {
+      requireNoLiveDv(spark, dir, version, "EVOLVED READ")
+      groups.toSeq
+        .map { case (applied, group) =>
+          applied.map(log).foldLeft(spark.read.parquet(group: _*))((df, c) => c.project(df))
         }
-        .sortBy(_.seq)
-        .toSeq
+        .reduce(_.unionByName(_))
+    }
   }
 
-  /** Drops whose column is still physically present in `entries`. */
-  private def activeDrops(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry]): Seq[ColumnDrop] =
-    dropLog(spark, dir).filter(d =>
-      d.version <= version && entries.exists(e => d.fileKeys.contains(fileKey(e.path))))
+  /** Read the latest snapshot with every schema change applied. */
+  def readLatestRenamed(spark: SparkSession, dir: String): DataFrame =
+    readVersionEvolved(spark, dir, latestVersion(spark, dir))
 
-  private def requireNoActiveDrop(
-      spark: SparkSession,
-      dir: String,
-      version: Int,
-      entries: Seq[ManifestEntry],
-      op: String): Unit = {
-    val active = activeDrops(spark, dir, version, entries)
-    require(active.isEmpty,
-      s"$op on $dir refused: dropped columns ${active.map(d => s"'${d.column}'").mkString(", ")} " +
-        "are still physically present in live files (a raw rewrite would resurrect them as " +
-        "NULLs across mixed physical schemas) — run commitOptimize first to fold the drop")
-  }
+  // ---- Named refs (tags) -------------------------------------------------
 
   private def tagsDir(dir: String) = new Path(dir, "_tags")
   private val TagFileRe = "(.+)\\.ref".r
@@ -2171,14 +1897,8 @@ object Snapshots {
     val td = tagsDir(dir)
     val f = fs(spark, td)
     f.mkdirs(td)
-    val payload = s"$version\n"
-    val tmp = new Path(td, s"$name.ref.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write((s"$CrcHeader${crc32Of(payload)}\n" + payload).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val won = claimExclusive(f, tmp, new Path(td, s"$name.ref"))
-    f.delete(tmp, false)
-    require(won, s"tag '$name' already exists on $dir (tags are write-once; use retag to move one)")
+    require(claimChecked(f, new Path(td, s"$name.ref"), s"$version\n"),
+      s"tag '$name' already exists on $dir (tags are write-once; use retag to move one)")
   }
 
   /** Move an existing tag to `version` — an explicit drop+tag (the
@@ -2213,17 +1933,7 @@ object Snapshots {
             // full-match: a crashed attempt's `<name>.ref.tmp-<uuid>`
             // never parses as a tag
             case TagFileRe(name) =>
-              val in = f.open(st.getPath)
-              val content =
-                try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-              require(content.startsWith(CrcHeader), s"tag '$name' on $dir is malformed")
-              val nl = content.indexOf('\n')
-              val declared = content.substring(CrcHeader.length, nl).toLong
-              val body = content.substring(nl + 1)
-              require(crc32Of(body) == declared,
-                s"tag '$name' on $dir failed its CRC check: metadata corruption")
-              Some(name -> body.trim.toInt)
+              Some(name -> readChecked(f, st.getPath, s"tag '$name' on $dir").trim.toInt)
             case _ => None
           }
         }
@@ -2325,9 +2035,7 @@ object Snapshots {
   def commitDeleteMor(spark: SparkSession, dir: String, column: String, lo: Long, hi: Long): Int = {
     val prev = latestVersion(spark, dir)
     val (statsCols, entries) = manifest(spark, dir, prev)
-    requireNoActiveRename(spark, dir, prev, entries, "MERGE-ON-READ DELETE")
-    requireNoActiveWiden(spark, dir, prev, entries, "MERGE-ON-READ DELETE")
-    requireNoActiveDrop(spark, dir, prev, entries, "MERGE-ON-READ DELETE")
+    requireNoActiveSchemaChange(spark, dir, prev, entries, "MERGE-ON-READ DELETE")
     val ci = statsCols.indexOf(column)
     require(ci >= 0, s"delete needs a zone map on $column; $dir declares $statsCols")
     val touched = entries.filter(e => e.stats(ci).max >= lo && e.stats(ci).min <= hi)
@@ -2458,13 +2166,15 @@ object Snapshots {
     val prev = latestVersion(spark, dir)
     require(prev >= 1, s"cannot merge into an empty table at $dir")
     val (statsCols, entries) = manifest(spark, dir, prev)
-    requireNoActiveRename(spark, dir, prev, entries, "MERGE-ON-READ MERGE")
-    requireNoActiveWiden(spark, dir, prev, entries, "MERGE-ON-READ MERGE")
-    requireNoActiveDrop(spark, dir, prev, entries, "MERGE-ON-READ MERGE")
-    // the change source is read once (persisted) and shared by the key
-    // aggregation, the new-file staging write, and the feed's postimage
-    // typing join — the commitMerge convention (guide §1.2)
-    val ch = changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    requireNoActiveSchemaChange(spark, dir, prev, entries, "MERGE-ON-READ MERGE")
+    // the change source is read once (persisted unless the caller already
+    // did — then the cache is theirs) and shared by the key aggregation,
+    // the new-file staging write, and the feed's postimage typing join —
+    // the commitMerge convention (guide §1.2)
+    val ownsCache = changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val ch =
+      if (ownsCache) changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else changes
     // one aggregation for the dup guard + every key-distinct consumer
     // (hit test, tombstone semi-join, feed) — the commitMerge convention
     val keyCounts = ch
@@ -2573,7 +2283,7 @@ object Snapshots {
       batchId.foreach(b => writeHwm(spark, dir, b, v))
       Some(v)
     } finally {
-      ch.unpersist(blocking = false)
+      if (ownsCache) ch.unpersist(blocking = false)
       keyCounts.unpersist(blocking = false)
       toFree.foreach(_.unpersist(blocking = false))
       ()

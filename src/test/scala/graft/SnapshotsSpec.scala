@@ -11,6 +11,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class SnapshotsSpec extends AnyFunSuite {
   private lazy val spark = Sessions.local("4")
 
+  /** Both merge-on-read rewrites of `dir` refuse, naming the fold. */
+  private def assertMorRefuses(dir: String, changes: org.apache.spark.sql.DataFrame): Unit =
+    Seq[() => Int](
+      () => Snapshots.commitDeleteMor(spark, dir, "id", 10L, 20L),
+      () => Snapshots.commitMergeMor(spark, dir, changes, "id")
+    ).foreach { c =>
+      val e = intercept[IllegalArgumentException](c())
+      assert(e.getMessage.contains("commitOptimize"), s"refusal should name the fold: $e")
+    }
+
   test("commit/append/overwrite lifecycle: history stays readable and bit-stable") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("snap_spec").toString
@@ -1008,32 +1018,49 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("a claimed-but-never-published rename entry is inert; vacuum reclaims it once dead") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("snap_rename_crash").toString
-    Snapshots.commitOverwrite(Seq((1L, 10L)).toDF("id", "amount"), dir)
-    // simulate a rename that crashed between claiming its schema entry
-    // and publishing its manifest: hand-write the entry exactly as
-    // commitRename stages it, naming the UNPUBLISHED version 2
-    val fileKeys = Snapshots.manifest(spark, dir, 1)._2
-      .map(e => new org.apache.hadoop.fs.Path(e.path).toUri.getPath)
-    val payload = s"#version=2\n#from=amount\n#to=cents\n" + fileKeys.mkString("", "\n", "\n")
-    val crc = { val c = new java.util.zip.CRC32; c.update(payload.getBytes("UTF-8")); c.getValue }
-    val sd = new java.io.File(dir, "_schema"); sd.mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sd.toString, "rename-1.list"), s"#crc=$crc\n$payload")
-    // pending (v2 unpublished): no reader applies it
-    assert(Snapshots.readLatestRenamed(spark, dir).columns.toSeq == Seq("id", "amount"),
-      "an unpublished rename must not rename anything")
-    // an append lands at v2 — the entry is now PROVABLY dead and stays inert
-    Snapshots.commitAppend(Seq((2L, 20L)).toDF("id", "amount"), dir)
-    assert(Snapshots.readLatestRenamed(spark, dir).columns.toSeq == Seq("id", "amount"),
-      "a version claimed by another commit must never activate a stale rename")
-    // vacuum purges the dead entry while the manifest proving it dead exists
-    Snapshots.vacuum(spark, dir, keepFrom = 1)
-    assert(!new java.io.File(sd, "rename-1.list").exists(),
-      "vacuum must reclaim provably dead rename entries")
-    // and a REAL rename still works afterwards
-    Snapshots.commitRename(spark, dir, "amount", "cents")
-    assert(Snapshots.readLatestRenamed(spark, dir).columns.toSeq == Seq("id", "cents"))
+    import org.apache.spark.sql.types.LongType
+    // one input per schema-change kind: the entry exactly as the commit
+    // stages it (payload headers after #version), then the real commit of
+    // that kind and what it must make readers see afterwards
+    val kinds = Seq[(String, String, String => Int, org.apache.spark.sql.DataFrame => Boolean)](
+      ("rename", "#from=amount\n#to=cents\n",
+        d => Snapshots.commitRename(spark, d, "amount", "cents"),
+        _.columns.toSeq == Seq("id", "cents", "flag")),
+      ("widen", "#column=amount\n#from=integer\n#to=long\n",
+        d => Snapshots.commitWiden(spark, d, "amount", "long"),
+        _.schema("amount").dataType == LongType),
+      ("drop", "#column=flag\n",
+        d => Snapshots.commitDropColumn(spark, d, "flag"),
+        _.columns.toSeq == Seq("id", "amount")))
+    kinds.foreach { case (kind, headers, commitReal, applied) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"snap_${kind}_crash").toString
+      Snapshots.commitOverwrite(Seq((1L, 10, 7L)).toDF("id", "amount", "flag"), dir)
+      val born = Snapshots.readLatest(spark, dir).schema
+      // simulate a change that crashed between claiming its schema entry
+      // and publishing its manifest: hand-write the entry, naming the
+      // UNPUBLISHED version 2
+      val fileKeys = Snapshots.manifest(spark, dir, 1)._2
+        .map(e => new org.apache.hadoop.fs.Path(e.path).toUri.getPath)
+      val payload = s"#version=2\n$headers" + fileKeys.mkString("", "\n", "\n")
+      val crc = { val c = new java.util.zip.CRC32; c.update(payload.getBytes("UTF-8")); c.getValue }
+      val sd = new java.io.File(dir, "_schema"); sd.mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(sd.toString, s"$kind-1.list"), s"#crc=$crc\n$payload")
+      // pending (v2 unpublished): no reader applies it
+      assert(Snapshots.readLatestRenamed(spark, dir).schema == born,
+        s"an unpublished $kind must not change the schema")
+      // an append lands at v2 — the entry is now PROVABLY dead and stays inert
+      Snapshots.commitAppend(Seq((2L, 20, 8L)).toDF("id", "amount", "flag"), dir)
+      assert(Snapshots.readLatestRenamed(spark, dir).schema == born,
+        s"a version claimed by another commit must never activate a stale $kind")
+      // vacuum purges the dead entry while the manifest proving it dead exists
+      Snapshots.vacuum(spark, dir, keepFrom = 1)
+      assert(!new java.io.File(sd, s"$kind-1.list").exists(),
+        s"vacuum must reclaim provably dead $kind entries")
+      // and a REAL change of that kind still works afterwards
+      commitReal(dir)
+      assert(applied(Snapshots.readLatestRenamed(spark, dir)), s"the real $kind must apply")
+    }
   }
 
   test("rewrite commits refuse while a rename is active; OPTIMIZE folds it and unblocks them") {
@@ -1050,6 +1077,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("commitOptimize"), s"refusal should name the fold: $e1")
     intercept[IllegalArgumentException](
       Snapshots.commitMerge(spark, dir, Seq((1L, 111L)).toDF("id", "cents"), "id"))
+    assertMorRefuses(dir, Seq((1L, 111L)).toDF("id", "cents"))
     // OPTIMIZE reads THROUGH the mapping and rewrites under the new name
     val v = Snapshots.commitOptimize(spark, dir, targetFileBytes = 1L << 20)
     val (statsCols, entries) = Snapshots.manifest(spark, dir, v)
@@ -1126,6 +1154,7 @@ class SnapshotsSpec extends AnyFunSuite {
       Snapshots.commitMerge(spark, dir, Seq((1L, 111L)).toDF("id", "amount"), "id"))
     intercept[IllegalArgumentException](
       Snapshots.commitRename(spark, dir, "amount", "cents"))
+    assertMorRefuses(dir, Seq((1L, 111L)).toDF("id", "amount"))
     // OPTIMIZE reads THROUGH the mapping and rewrites physically wide
     val v = Snapshots.commitOptimize(spark, dir, targetFileBytes = 1L << 20)
     val entries = Snapshots.manifest(spark, dir, v)._2
@@ -1180,6 +1209,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("commitOptimize"), s"refusal should name the fold: $e1")
     intercept[IllegalArgumentException](
       Snapshots.commitRename(spark, dir, "amount", "cents"))
+    assertMorRefuses(dir, Seq((1L, 111L)).toDF("id", "amount"))
     // OPTIMIZE folds: the rewritten files physically lack the column
     val v = Snapshots.commitOptimize(spark, dir, targetFileBytes = 1L << 20)
     val entries = Snapshots.manifest(spark, dir, v)._2
@@ -1280,5 +1310,23 @@ class SnapshotsSpec extends AnyFunSuite {
     Snapshots.commitWiden(spark, dir, "n", "long")
     assert(Snapshots.readLatestRenamed(spark, dir).schema("n").dataType
       == org.apache.spark.sql.types.LongType)
+  }
+
+  test("merges leave a change batch the caller persisted cached") {
+    import org.apache.spark.storage.StorageLevel
+    val changes = spark.range(5, 15).select(col("id"), (col("id") + 1000L).as("x")).persist()
+    try {
+      Seq[(String, String => Int)](
+        "commitMerge" -> (d => Snapshots.commitMerge(spark, d, changes, "id")),
+        "commitMergeMor" -> (d => Snapshots.commitMergeMor(spark, d, changes, "id"))
+      ).foreach { case (what, merge) =>
+        val dir = java.nio.file.Files.createTempDirectory(s"snap_owned_$what").toString
+        Snapshots.commitOverwrite(spark.range(0, 10).select(col("id"), col("id").as("x")), dir, Seq("id"))
+        assert(merge(dir) == 2)
+        assert(changes.storageLevel != StorageLevel.NONE,
+          s"$what must not unpersist a cache its caller owns")
+        assert(Snapshots.readLatest(spark, dir).count() == 15L)
+      }
+    } finally changes.unpersist()
   }
 }
