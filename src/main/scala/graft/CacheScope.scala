@@ -27,30 +27,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Contract: execute every ACTION on the batch's results INSIDE the
   * scope. Cached plans re-materialize lazily after exit, but a frame
-  * built on `localCheckpoint` (the components rounds) has truncated
-  * lineage — once its blocks are freed it cannot be recomputed, so a
-  * DataFrame smuggled out of the scope and collected later may fail.
+  * built on a [[Rounds]] checkpoint has truncated lineage — once its
+  * blocks are freed it cannot be recomputed, so a DataFrame smuggled out
+  * of the scope and collected later may fail.
   */
 object CacheScope {
-
-  /** Free a SUPERSEDED `localCheckpoint` frame's blocks. A checkpointed
-    * Dataset's plan is a bare [[org.apache.spark.sql.execution.LogicalRDD]]
-    * over the materialized RDD; `Dataset.unpersist` cannot reach it (the
-    * blocks are RDD-persisted, not CacheManager entries), so an iterative
-    * loop that re-checkpoints per round otherwise accumulates one dead
-    * block set PER ROUND until batch-scope reclamation — at 100 TB a
-    * |V|-sized frontier times the round count (guide §5). Only call this
-    * on a frame that is provably never read again: the successor
-    * checkpoint is materialized EAGERLY, and unpersisting truncated
-    * lineage makes the frame unrecomputable by design.
-    */
-  def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-        ()
-      case _ => ()
-    }
 
   /** Run `body`, then unpersist every RDD that became persistent during
     * it. Exception-safe: blocks are freed on the error path too.

@@ -408,17 +408,14 @@ object ScaleBench {
         } catch { case _: Throwable => Seq.empty[Long] }
       s""""$tag":${counts.mkString("[", ",", "]")}"""
     }
-    // g19: per-round adopted-winner counts, read off the gate's own
-    // (node, round) output — a quenched corpus (empty later rounds)
-    // must be visible in the artifact (the g12/g18 counter convention)
+    // g19: per-round adopted-winner counts from the gate's loop — a
+    // quenched corpus (no undecided node left) must be visible in the
+    // artifact as a shorter list (the g12/g18 counter convention)
     val g19Rounds = Seq("small" -> smallDir, "large" -> largeDir).map { case (tag, dir) =>
       val counts =
         if (!only.forall(_.contains("g19_mis"))) Seq.empty[Long]
         else try CacheScope.scoped(spark) {
-          queries.RelationalQueries
-            .maximalIndependentSet(spark, dir)
-            .groupBy("round").count().orderBy("round")
-            .collect().map(_.getLong(1)).toSeq
+          queries.RelationalQueries.misRoundWinners(spark, dir)
         } catch { case _: Throwable => Seq.empty[Long] }
       s""""$tag":${counts.mkString("[", ",", "]")}"""
     }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Rounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -24,12 +25,8 @@ import org.apache.spark.storage.StorageLevel
   * round and converges in O(log^2 n) rounds at any diameter.
   *
   * Each round references the previous labels TWICE (own label + neighbor
-  * propagation), so without cutting lineage the logical plan doubles per
-  * round — exponential analyzer cost that OOMs the driver near round 10
-  * regardless of data size. Rounds therefore `localCheckpoint` (truncate
-  * lineage, keep partitions on executors); on a real cluster prefer
-  * reliable `checkpoint()` to durable storage so executor loss cannot
-  * void a round.
+  * propagation), so both loops run on [[graft.Rounds]], which cuts the
+  * lineage per round and frees each superseded round.
   */
 object Components {
 
@@ -44,9 +41,6 @@ object Components {
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var labels = nodes
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
     // Labels only ever DECREASE (least of own + neighbor min), so the
     // label sum strictly decreases exactly when any label changed —
     // convergence detection is one aggregate over the checkpointed round,
@@ -56,34 +50,33 @@ object Components {
       df.agg(coalesce(sum(col("label").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")))
         .head()
         .getDecimal(0)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val neighborMin = undirected
-        .join(labels, undirected("dst") === labels("id"))
-        .groupBy(undirected("src").as("nid"))
-        .agg(min(col("label")).as("nbr_min"))
-      val next = labels
-        .join(neighborMin, labels("id") === neighborMin("nid"), "left")
-        .select(
-          labels("id"),
-          least(labels("label"), coalesce(col("nbr_min"), labels("label"))).as("label"))
-        .localCheckpoint()
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      iter += 1
-    }
-    undirected.unpersist()
-    if (!converged)
+    val run =
+      try {
+        val seed = Rounds.checkpoint(nodes.select(col("id"), col("id").as("label")))
+        Rounds.run[(DataFrame, java.math.BigDecimal)](
+          (seed, labelSum(seed)),
+          maxIter,
+          stop = r => r.next._2.compareTo(r.prev._2) == 0) { case ((labels, _), _) =>
+          val neighborMin = undirected
+            .join(labels, undirected("dst") === labels("id"))
+            .groupBy(undirected("src").as("nid"))
+            .agg(min(col("label")).as("nbr_min"))
+          val next = Rounds.checkpoint(
+            labels
+              .join(neighborMin, labels("id") === neighborMin("nid"), "left")
+              .select(
+                labels("id"),
+                least(labels("label"), coalesce(col("nbr_min"), labels("label"))).as("label")))
+          (next, labelSum(next))
+        }
+      } finally undirected.unpersist()
+    if (!run.stopped)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — graph diameter " +
           "exceeds the budget; raise maxIter or use connectedComponentsStar, which " +
           "converges in O(log^2 n) rounds regardless of diameter. Returning partial " +
           "labels would silently keep duplicates downstream.")
-    labels
+    run.state._1
   }
 
   /** Diameter-independent variant: alternating large-star/small-star
@@ -141,25 +134,22 @@ object Components {
       canonical(rewired)
     }
 
-    var e = canonical(edges.select(col("src"), col("dst"))).localCheckpoint()
-    var fp = fingerprint(e)
-    var iter = 0
-    var converged = e.isEmpty
-    while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
-      val nfp = fingerprint(next)
-      converged = nfp == fp
-      fp = nfp
-      e = next
-      iter += 1
+    // an empty edge set is stable after one no-op round
+    val e0 = Rounds.checkpoint(canonical(edges.select(col("src"), col("dst"))))
+    val run = Rounds.run[(DataFrame, (Long, Long))](
+      (e0, fingerprint(e0)),
+      maxIter,
+      stop = r => r.next._2 == r.prev._2) { case ((e, _), _) =>
+      val next = Rounds.checkpoint(smallStar(largeStar(e)))
+      (next, fingerprint(next))
     }
-    if (!converged)
+    if (!run.stopped)
       throw new IllegalStateException(
         s"connectedComponentsStar did not stabilize in $maxIter rounds")
     // stable star forest: every edge is (root=lo, member=hi)
     nodes
       .join(
-        e.select(col("hi").as("id"), col("lo").as("root")),
+        run.state._1.select(col("hi").as("id"), col("lo").as("root")),
         Seq("id"),
         "left")
       .select(col("id"), coalesce(col("root"), col("id")).as("label"))

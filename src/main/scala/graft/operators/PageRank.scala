@@ -26,8 +26,10 @@ import org.apache.spark.sql.functions._
   * rank frame is |V| rows, small relative to |E|. Long overflow headroom:
   * a node's incoming mass is bounded by |V|·Scale, so 85·Σ stays inside
   * a long for |V| up to ~1e8 at Scale = 1e9; raise Scale only with a
-  * decimal combine. For many more iterations than the handful used here,
-  * cut lineage every ~10 rounds (localCheckpoint) as Components does.
+  * decimal combine. The rounds compose lazily (linear lineage, no
+  * per-round job); for many more iterations than the handful used here,
+  * run them on [[graft.Rounds]], which cuts lineage and frees each
+  * superseded round.
   */
 object PageRank {
 

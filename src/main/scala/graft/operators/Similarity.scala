@@ -167,10 +167,10 @@ object Similarity {
     * plan); the greedy re-rank then runs over the bounded candidate frame
     * (|queries|·candK rows) and its pairwise-sim frame (·candK²), both
     * persisted and broadcast-joined, with selectK−1 deterministic
-    * argmax-window rounds composed lazily — no driver-side loop over
-    * data, no action per round. Every comparison is on doubles derived
-    * from the same integer dot/norm formula both engines share, with
-    * vec_id tiebreaks, so selection is total-order deterministic.
+    * argmax-window rounds, each one small job over that bounded frame.
+    * Every comparison is on doubles derived from the same integer
+    * dot/norm formula both engines share, with vec_id tiebreaks, so
+    * selection is total-order deterministic.
     *
     * Output: (query_id, rnk 1..selectK, vec_id, rel, maxsim) where maxsim
     * is the max similarity to the previously selected set at selection
@@ -230,44 +230,40 @@ object Similarity {
     // lazily DOUBLES the plan per round — the beamSearch disease (round-12
     // fix): the composed v9 plan measured 11,628 formatted lines / 981
     // Exchanges / 813 parquet scans for 4 rounds. `state` is bounded
-    // (|queries| * candK rows, corpus-independent), so localCheckpoint per
-    // round keeps the plan LINEAR in rounds at one tiny job each — the
-    // graph-rounds convention.
-    var state = candSlim
-      .join(sel1.select(col("query_id"), col("vec_id").as("sel_id")), "query_id")
-      .filter(col("vec_id") =!= col("sel_id"))
-      .join(
-        broadcast(pairs.withColumnRenamed("pa", "vec_id").withColumnRenamed("pb", "sel_id")),
-        Seq("query_id", "vec_id", "sel_id"))
-      .select(col("query_id"), col("vec_id"), col("rel"), col("sim").as("maxsim"))
-      .localCheckpoint()
-    var out = sel1
+    // (|queries| * candK rows, corpus-independent), so the rounds run on
+    // [[graft.Rounds]] at one tiny job each. The selections accumulate as
+    // a lazy union over the round states, so the driver keeps those
+    // states (rows bounded as above) readable until the caller's action.
+    def advance(state: DataFrame, pick: DataFrame): DataFrame =
+      state
+        .join(pick.select(col("query_id"), col("vec_id").as("sel_id")), "query_id")
+        .filter(col("vec_id") =!= col("sel_id"))
+        .join(
+          broadcast(pairs.withColumnRenamed("pa", "vec_id").withColumnRenamed("pb", "sel_id")),
+          Seq("query_id", "vec_id", "sel_id"))
+    val state1 = graft.Rounds.checkpoint(
+      advance(candSlim, sel1)
+        .select(col("query_id"), col("vec_id"), col("rel"), col("sim").as("maxsim")))
     val wMmr = Window
       .partitionBy(col("query_id"))
       .orderBy((col("rel") - col("maxsim")).desc, col("vec_id"))
-    for (r <- 2 to selectK) {
+    // round k picks rank k+1; the last round's pick needs no successor state
+    graft.Rounds.run((state1, sel1), selectK - 1) { case ((state, out), k) =>
       val pick = state
         .withColumn("rn", row_number().over(wMmr))
         .filter(col("rn") === 1)
-        .select(col("query_id"), lit(r.toLong).as("rnk"), col("vec_id"), col("rel"), col("maxsim"))
-      out = out.unionByName(pick)
-      if (r < selectK) {
-        state = state
-          .join(pick.select(col("query_id"), col("vec_id").as("sel_id")), "query_id")
-          .filter(col("vec_id") =!= col("sel_id"))
-          .join(
-            broadcast(
-              pairs.withColumnRenamed("pa", "vec_id").withColumnRenamed("pb", "sel_id")),
-            Seq("query_id", "vec_id", "sel_id"))
-          .select(
-            col("query_id"),
-            col("vec_id"),
-            col("rel"),
-            greatest(col("maxsim"), col("sim")).as("maxsim"))
-          .localCheckpoint()
-      }
-    }
-    out
+        .select(col("query_id"), lit(k + 1L).as("rnk"), col("vec_id"), col("rel"), col("maxsim"))
+      val next =
+        if (k + 1 == selectK) state
+        else
+          graft.Rounds.checkpoint(
+            advance(state, pick).select(
+              col("query_id"),
+              col("vec_id"),
+              col("rel"),
+              greatest(col("maxsim"), col("sim")).as("maxsim")))
+      (next, out.unionByName(pick))
+    }.state._2
   }
 
   /** Sign-LSH bucket key: the sign bits of the first b QUANTIZED

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Rounds, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1295,14 +1295,12 @@ object RelationalQueries {
     * is static (persisted once, both directions); the evolving state is
     * the |nodes|-sized ALIVE set, pruned per round as
     * alive' = alive ∩ {v : deg induced by alive ≥ k}. The alive frame is
-    * referenced twice per round, so each round cuts lineage with
-    * `localCheckpoint` (the Components/Bfs convention — per-round
-    * persist alone leaves an exponential logical tree plus nested AQE
-    * cache stages, measured ~25 s of planning at sf0.1; checkpointing
-    * |nodes| rows instead of re-materializing |edges| holds the round
-    * cost at one broadcast semi-join + one map-combined degree agg). On
-    * a real cluster prefer reliable `checkpoint()` so executor loss
-    * cannot void a round. Full coreness numbers need
+    * referenced twice per round, so the rounds run on [[graft.Rounds]]
+    * (per-round persist alone leaves an exponential logical tree plus
+    * nested AQE cache stages, measured ~25 s of planning at sf0.1;
+    * checkpointing |nodes| rows instead of re-materializing |edges| holds
+    * the round cost at one broadcast semi-join + one map-combined degree
+    * agg). Full coreness numbers need
     * iterate-to-fixpoint; the gate pins the bounded-round operating
     * point, whose round-by-round survivor counts shrink strictly at the
     * gate corpus (k=80), so all four rounds do real work. Output:
@@ -1313,12 +1311,14 @@ object RelationalQueries {
 
   /** The g12 peeling loop, shared by the gate and the scale probe:
     * returns the persisted undirected edge frame and the final alive
-    * set, calling `onRound(round, alive)` after each round's prune so a
-    * caller can observe (count) the surviving frontier without the gate
-    * paying for it.
+    * set; `onRound` sees each round's alive set, so a caller can count
+    * the surviving frontier without the gate paying for it.
     */
-  private def kCorePeel(spark: SparkSession, sfDir: String)(
-      onRound: (Int, DataFrame) => Unit): (DataFrame, DataFrame) = {
+  private def kCorePeel(
+      spark: SparkSession,
+      sfDir: String,
+      onRound: Rounds.Round[DataFrame] => Unit = Rounds.ignore[DataFrame])
+      : (DataFrame, DataFrame) = {
     val e = coOccurrenceEdges(spark, sfDir)
     val und = e
       .select(col("a").as("src"), col("b").as("dst"))
@@ -1327,20 +1327,17 @@ object RelationalQueries {
       // convention): each round shuffles only the alive set, never und
       .repartition(col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var alive = und.select(col("src").as("node")).distinct().localCheckpoint()
-    var r = 0
-    while (r < KCoreRounds) {
+    val all = Rounds.checkpoint(und.select(col("src").as("node")).distinct())
+    val peeled = Rounds.run(all, KCoreRounds, onRound = onRound) { (alive, _) =>
       val deep = und
         .join(alive.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
         .groupBy(col("src"))
         .agg(count(lit(1)).as("d"))
         .filter(col("d") >= KCoreK)
         .select(col("src").as("node"))
-      alive = alive.join(deep, Seq("node"), "left_semi").localCheckpoint()
-      r += 1
-      onRound(r, alive)
+      Rounds.checkpoint(alive.join(deep, Seq("node"), "left_semi"))
     }
-    (und, alive)
+    (und, peeled.state)
   }
 
   /** g18: k-truss peeling — the EDGE analog of g12's k-core and the
@@ -1352,7 +1349,7 @@ object RelationalQueries {
     * O(m^1.5) skew-proof) runs ONCE, on the full graph; every round's
     * induced support is then three semi-joins of the persisted
     * canonical-edge triangle list against the alive set plus one hash
-    * re-aggregation (see [[kTrussPeel]]). The evolving state is the
+    * re-aggregation (see [[kTrussPeelRounds]]). The evolving state is the
     * EDGE set, pruned by a (a, b)-keyed semi-join and lineage-cut per
     * round (the g12 convention); at the sf0.01 gate corpus the rounds
     * do real work (115.7k → 69.6k → 22.3k → 2.6k edges, strictly
@@ -1362,8 +1359,28 @@ object RelationalQueries {
   private val TrussSupport = 10L
   private val TrussRounds = 3
 
-  /** The g18 peeling loop, shared by the gate and the scale probe (the
-    * kCorePeel twin): `onRound` observes each round's surviving edges.
+  /** Broadcast the alive-edge side of the per-round semi-joins up to
+    * this many edges (~64 MB of packed longs — safe well past the 190k+
+    * survivor counts measured at the 10x corpus); a larger alive set
+    * falls back to shuffle semi-joins, so the operator never wedges a
+    * too-big broadcast at scale.
+    */
+  private val TrussBcastAliveMax = 4000000L
+
+  /** g18 peel state: the alive packed-edge set (None before round 1) and
+    * its size, counted every round to size the semi-joins.
+    */
+  private[graft] final case class Peel(alive: Option[DataFrame], n: Long)
+
+  /** The fixpoint stop rule: alive sets are nested round over round
+    * (support only decreases), so an equal count IS an equal set.
+    */
+  private[graft] val PeelStable: Rounds.Round[Peel] => Boolean = r => r.next.n == r.prev.n
+
+  /** The g18 peeling loop, shared by the gate (the [[TrussRounds]]
+    * budget), the scale probe (the kCorePeel twin) and FixpointSpec, which
+    * runs it under [[PeelStable]] to prove the budget's sufficiency on
+    * the small corpus.
     *
     * Enumerate-once design: the O(m^1.5) degree-oriented wedge join runs
     * EXACTLY ONCE, on the full graph — a triangle of the induced
@@ -1379,30 +1396,12 @@ object RelationalQueries {
     * set is materialized — nothing outlives the call (the 10x-corpus
     * CacheScope heap lesson).
     */
-  /** Broadcast the alive-edge side of the per-round semi-joins up to
-    * this many edges (~64 MB of packed longs — safe well past the 190k+
-    * survivor counts measured at the 10x corpus); a larger alive set
-    * falls back to shuffle semi-joins, so the operator never wedges a
-    * too-big broadcast at scale.
-    */
-  private val TrussBcastAliveMax = 4000000L
-
-  private def kTrussPeel(spark: SparkSession, sfDir: String)(
-      onRound: (Int, DataFrame) => Unit): DataFrame =
-    kTrussPeelRounds(spark, sfDir, toFixpoint = false)(onRound)
-
-  /** The g18 peel with a FIXPOINT mode: keep peeling until the alive-edge
-    * count stops falling (alive sets are nested round over round —
-    * support only decreases — so an equal count IS an equal set). The
-    * gate stays the bounded-round form; FixpointSpec uses this to prove
-    * the bound's sufficiency on the small corpus.
-    */
   private[graft] def kTrussPeelRounds(
       spark: SparkSession,
       sfDir: String,
-      toFixpoint: Boolean,
-      maxFixpointRounds: Int = 64)(
-      onRound: (Int, DataFrame) => Unit): DataFrame = {
+      maxRounds: Int = TrussRounds,
+      stop: Rounds.Round[Peel] => Boolean = Rounds.never[Peel],
+      onRound: Rounds.Round[Peel] => Unit = Rounds.ignore[Peel]): DataFrame = {
     val e0 = coOccurrenceEdges(spark, sfDir)
     val oriented = graft.operators.Triangles.orient(e0).persist()
     // each triangle stored as its three CANONICAL (a < b) edges, each
@@ -1423,11 +1422,13 @@ object RelationalQueries {
     // a triangle of the induced subgraph = an original triangle whose
     // three edges are all alive: three equi-semi-joins against the
     // alive set — broadcast when it is small (it collapses to 2.4% of
-    // |edges| after round 1 here), shuffled when not
-    def aliveTriangles(alive: DataFrame, nAlive: Long): DataFrame = {
+    // |edges| after round 1 here), shuffled when not. Before round 1 the
+    // alive set is the full edge list, so its support comes straight off
+    // the enumeration (no semi-joins to apply yet).
+    def aliveTriangles(peel: Peel): DataFrame = peel.alive.fold(tris) { alive =>
       def side(k: String) = {
         val f = alive.select(col("e").as(k))
-        if (nAlive <= TrussBcastAliveMax) broadcast(f) else f
+        if (peel.n <= TrussBcastAliveMax) broadcast(f) else f
       }
       tris
         .join(side("e1"), Seq("e1"), "left_semi")
@@ -1445,38 +1446,26 @@ object RelationalQueries {
     // every edge of a surviving triangle is alive by construction, so no
     // extra semi-join against the previous alive set is needed; edges in
     // no surviving triangle have support 0 and vanish from the frame
-    var alive: DataFrame = null
-    var nAlive = 0L
-    var prevAlive = -1L
-    var r = 0
-    while (
-      (!toFixpoint && r < TrussRounds) ||
-      (toFixpoint && nAlive != prevAlive && r < maxFixpointRounds)) {
-      prevAlive = nAlive
-      // round 1's alive set is the full edge list, so its support comes
-      // straight off the enumeration (no semi-joins to apply yet)
-      val supported = if (r == 0) tris else aliveTriangles(alive, nAlive)
-      alive = supportOf(supported)
-        .filter(col("common") >= TrussSupport)
-        .select(col("e"))
-        .localCheckpoint()
-      nAlive = alive.count()
-      r += 1
-      onRound(r, alive)
+    val peeled = Rounds.run(Peel(None, 0L), maxRounds, stop, onRound) { (peel, _) =>
+      val alive = Rounds.checkpoint(
+        supportOf(aliveTriangles(peel))
+          .filter(col("common") >= TrussSupport)
+          .select(col("e")))
+      Peel(Some(alive), alive.count())
     }
-    val support = supportOf(aliveTriangles(alive, nAlive))
-      .select(
-        shiftrightunsigned(col("e"), 32).as("a"),
-        col("e").bitwiseAND(lit(4294967295L)).as("b"),
-        col("common"))
-      .localCheckpoint()
+    val support = Rounds.checkpoint(
+      supportOf(aliveTriangles(peeled.state))
+        .select(
+          shiftrightunsigned(col("e"), 32).as("a"),
+          col("e").bitwiseAND(lit(4294967295L)).as("b"),
+          col("common")))
     tris.unpersist(blocking = false)
     oriented.unpersist(blocking = false)
     support
   }
 
   def kTruss(spark: SparkSession, sfDir: String): DataFrame =
-    kTrussPeel(spark, sfDir)((_, _) => ())
+    kTrussPeelRounds(spark, sfDir)
       .transform(orderedOutput(_, col("a"), col("b")))
 
   /** g18 scale probe: per-round surviving-edge counts (the g12 counter
@@ -1485,12 +1474,12 @@ object RelationalQueries {
     */
   def kTrussRoundSurvivors(spark: SparkSession, sfDir: String): Seq[(Int, Long)] = {
     val counts = scala.collection.mutable.ListBuffer.empty[(Int, Long)]
-    kTrussPeel(spark, sfDir)((r, e) => counts += ((r, e.count())))
+    kTrussPeelRounds(spark, sfDir, onRound = r => counts += ((r.index, r.next.n)))
     counts.toList
   }
 
   def kCore(spark: SparkSession, sfDir: String): DataFrame = {
-    val (und, alive) = kCorePeel(spark, sfDir)((_, _) => ())
+    val (und, alive) = kCorePeel(spark, sfDir)
     und
       .join(alive.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
       .join(alive.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
@@ -1509,7 +1498,7 @@ object RelationalQueries {
     */
   def kCoreRoundSurvivors(spark: SparkSession, sfDir: String): Seq[(Int, Long)] = {
     val counts = scala.collection.mutable.ListBuffer.empty[(Int, Long)]
-    kCorePeel(spark, sfDir)((r, alive) => counts += ((r, alive.count())))
+    kCorePeel(spark, sfDir, r => counts += ((r.index, r.next.count())))
     counts.toList
   }
 
@@ -1564,7 +1553,7 @@ object RelationalQueries {
     * construction (a winner's whole neighborhood is removed with it).
     * Per round: two alive-set semi-joins over the pre-partitioned
     * undirected frame + one (src)-keyed min + one anti-join pair — the
-    * g12 shape, no windows, lineage cut per round. Output: (node,
+    * g12 shape, no windows, on [[graft.Rounds]]. Output: (node,
     * round) for every node adopted INTO the set within [[MisRounds]]
     * rounds — 16/14/15 winners per round at the gate corpus (a dense
     * graph keeps per-round independent sets small, which is exactly why
@@ -1574,20 +1563,44 @@ object RelationalQueries {
   private val MisRounds = 3
 
   def maximalIndependentSet(spark: SparkSession, sfDir: String): DataFrame =
-    misWinners(spark, sfDir, MisRounds, toFixpoint = false)._1
+    misWinners(spark, sfDir).state
       .transform(orderedOutput(_, col("node")))
 
-  /** The Luby loop behind g19, with an explicit round budget and a
-    * FIXPOINT mode (run until the undecided set empties — one count per
-    * round, spec-only; the gate stays the bounded-round, action-free
-    * form). Returns (winners with round, rounds run, undecided left —
-    * -1 when not counted).
+  /** g19 scale probe: per-round adopted-winner counts. The loop runs to
+    * [[LubySettled]] within the gate's budget, so every counted round
+    * adopts at least one node, and a quenched corpus shows as a shorter
+    * list (the g12/g18 counter convention).
+    */
+  def misRoundWinners(spark: SparkSession, sfDir: String): Seq[Long] = {
+    val counts = scala.collection.mutable.ListBuffer.empty[Long]
+    misWinners(
+      spark,
+      sfDir,
+      stop = LubySettled,
+      onRound = r => counts += r.next.winners.filter(col("round") === r.index.toLong).count())
+    counts.toList
+  }
+
+  /** Luby state: the undecided nodes, and every winner so far with the
+    * round that adopted it. Both are checkpointed each round, so the
+    * winners accumulate in ONE frame instead of one frame per round.
+    */
+  private[graft] final case class Luby(undecided: DataFrame, winners: DataFrame)
+
+  /** The fixpoint stop rule: the undecided set emptied (one job per
+    * round, spec/probe only; the gate runs its bounded budget).
+    */
+  private[graft] val LubySettled: Rounds.Round[Luby] => Boolean = _.next.undecided.isEmpty
+
+  /** The Luby loop behind g19: (node, round) for every winner within
+    * `maxRounds` rounds. FixpointSpec runs it under [[LubySettled]].
     */
   private[graft] def misWinners(
       spark: SparkSession,
       sfDir: String,
-      maxRounds: Int,
-      toFixpoint: Boolean): (DataFrame, Int, Long) = {
+      maxRounds: Int = MisRounds,
+      stop: Rounds.Round[Luby] => Boolean = Rounds.never[Luby],
+      onRound: Rounds.Round[Luby] => Unit = Rounds.ignore[Luby]): Rounds.Result[DataFrame] = {
     val e = coOccurrenceEdges(spark, sfDir)
     val und = e
       .select(col("a").as("src"), col("b").as("dst"))
@@ -1596,39 +1609,34 @@ object RelationalQueries {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def pkey(c: org.apache.spark.sql.Column) =
       concat(graft.operators.Sampling.hashUniformHex("mis", c), lpad(c.cast("string"), 12, "0"))
-    var undecided = und.select(col("src").as("node")).distinct().localCheckpoint()
-    var undecidedLeft = if (toFixpoint) undecided.count() else -1L
-    val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var r = 1
-    var done = false
-    while (!done && r <= maxRounds) {
-      val uE = und
-        .join(undecided.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-        .join(undecided.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-      val minNbr = uE
-        .groupBy(col("src"))
-        .agg(min(pkey(col("dst"))).as("mn"))
-        .withColumnRenamed("src", "node")
-      val winners = undecided
-        .join(minNbr, Seq("node"), "left")
-        .filter(col("mn").isNull || pkey(col("node")) < col("mn"))
-        .select(col("node"))
-        .localCheckpoint()
-      rounds += winners.withColumn("round", lit(r.toLong))
-      val removed = und
-        .join(winners.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-        .select(col("dst").as("node"))
-      undecided = undecided
-        .join(winners, Seq("node"), "left_anti")
-        .join(removed, Seq("node"), "left_anti")
-        .localCheckpoint()
-      if (toFixpoint) {
-        undecidedLeft = undecided.count()
-        done = undecidedLeft == 0L
+    try {
+      val all = Rounds.checkpoint(und.select(col("src").as("node")).distinct())
+      val none = all.filter(lit(false)).withColumn("round", lit(0L))
+      val run = Rounds.run(Luby(all, none), maxRounds, stop, onRound) { (s, r) =>
+        val uE = und
+          .join(s.undecided.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+          .join(s.undecided.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
+        val minNbr = uE
+          .groupBy(col("src"))
+          .agg(min(pkey(col("dst"))).as("mn"))
+          .withColumnRenamed("src", "node")
+        val winners = Rounds.checkpoint(
+          s.winners.unionAll(
+            s.undecided
+              .join(minNbr, Seq("node"), "left")
+              .filter(col("mn").isNull || pkey(col("node")) < col("mn"))
+              .select(col("node"), lit(r.toLong).as("round"))))
+        val won = winners.filter(col("round") === r.toLong).select(col("node"))
+        val removed = und
+          .join(won.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+          .select(col("dst").as("node"))
+        val undecided = s.undecided
+          .join(won, Seq("node"), "left_anti")
+          .join(removed, Seq("node"), "left_anti")
+        Luby(Rounds.checkpoint(undecided), winners)
       }
-      if (!done) r += 1
-    }
-    (rounds.reduce(_ unionAll _), math.min(r, maxRounds), undecidedLeft)
+      run.copy(state = run.state.winners)
+    } finally und.unpersist()
   }
 
   /** Support-thresholded co-occurrence edges (pairs sharing at least
@@ -1670,15 +1678,15 @@ object RelationalQueries {
     * the bounded output IS the true component labeling at every tested
     * SF (FixpointSpec proves it against a fixpoint run + the edge law).
     * Per round: one keyed join + min-agg over the pre-partitioned
-    * undirected frame, one label-keyed self-join for compression, one
-    * localCheckpoint lineage cut — the g12/g19 shape, no windows, no
-    * driver-side graph. Output: node → component id (= the component's
+    * undirected frame and one label-keyed self-join for compression, on
+    * [[graft.Rounds]] — the g12/g19 shape, no windows, no driver-side
+    * graph. Output: node → component id (= the component's
     * min node id, the canonical representative) + component size.
     */
   private val CcRounds = 8
 
   def connectedComponents(spark: SparkSession, sfDir: String): DataFrame = {
-    val labels = componentRounds(spark, sfDir, CcRounds, toFixpoint = false)._1
+    val labels = componentRounds(spark, sfDir).state
     val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("comp_size"))
     labels
       .join(sizes, Seq("comp"))
@@ -1686,94 +1694,79 @@ object RelationalQueries {
       .transform(orderedOutput(_, col("node")))
   }
 
-  /** The HashMin+compression loop behind g20, with an explicit round
-    * budget and a FIXPOINT mode (stop when no label changed — one count
-    * per round, spec-only; the gate stays the action-free bounded-round
-    * form). Returns (node → comp, rounds run, labels changed in the last
-    * counted round — -1 when not counted).
-    */
   /** g20 scale probe: per-round changed-label counts from the same loop
-    * the gate runs (the g12/g18/g19 counter convention — a corpus that
-    * converges by round 2 prices only the early rounds, and the
-    * counters make that visible in the artifact).
+    * the gate runs, stopping at the first round that changes nothing (the
+    * g12/g18/g19 counter convention — a corpus that converges by round 2
+    * prices only the early rounds, and the counters make that visible in
+    * the artifact).
     */
   def componentRoundDeltas(spark: SparkSession, sfDir: String): Seq[Long] = {
     val counts = scala.collection.mutable.ListBuffer.empty[Long]
-    componentRounds(spark, sfDir, CcRounds, toFixpoint = true, onRound = (_, c) => counts += c)
+    componentRounds(
+      spark,
+      sfDir,
+      onRound = r => counts += labelsChanged(r),
+      stop = _ => counts.last == 0L)
     counts.toList
   }
 
+  /** Labels a g20 round changed (one join count; spec and probe only). */
+  private[graft] def labelsChanged(r: Rounds.Round[DataFrame]): Long =
+    r.next
+      .join(r.prev.select(col("node"), col("comp").as("old")), Seq("node"))
+      .filter(col("comp") =!= col("old"))
+      .count()
+
+  /** The fixpoint stop rule: a round changed no label. */
+  private[graft] val LabelsStable: Rounds.Round[DataFrame] => Boolean = labelsChanged(_) == 0L
+
+  /** The HashMin+compression loop behind g20: node → comp after at most
+    * `maxRounds` rounds. FixpointSpec runs it under [[LabelsStable]].
+    */
   private[graft] def componentRounds(
       spark: SparkSession,
       sfDir: String,
-      maxRounds: Int,
-      toFixpoint: Boolean,
-      onRound: (Int, Long) => Unit = (_, _) => ()): (DataFrame, Int, Long) = {
+      maxRounds: Int = CcRounds,
+      stop: Rounds.Round[DataFrame] => Boolean = Rounds.never[DataFrame],
+      onRound: Rounds.Round[DataFrame] => Unit = Rounds.ignore[DataFrame])
+      : Rounds.Result[DataFrame] = {
     val e = strongCoEdges(spark, sfDir)
     val und = e
       .select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = und
-      .select(col("src").as("node"))
-      .distinct()
-      .withColumn("comp", col("node"))
-      .localCheckpoint()
-    var changed = -1L
-    var r = 1
-    var done = false
-    while (!done && r <= maxRounds) {
-      val nbrMin = und
-        .join(
-          labels.select(col("node").as("dst"), col("comp").as("dcomp")),
-          Seq("dst"))
-        .groupBy(col("src"))
-        .agg(min(col("dcomp")).as("nmin"))
-        .withColumnRenamed("src", "node")
-      val hashed = labels
-        .join(nbrMin, Seq("node"), "left")
-        .select(
-          col("node"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-      // pointer compression: follow the label one hop through the NEW
-      // mapping (labels are node ids, so every comp resolves to a row)
-      val ptr = hashed.select(col("node").as("pnode"), col("comp").as("pcomp"))
-      val compressed = hashed
-        .join(ptr, col("comp") === col("pnode"), "left")
-        .select(
-          col("node"),
-          least(col("comp"), coalesce(col("pcomp"), col("comp"))).as("comp"))
-        .localCheckpoint()
-      if (toFixpoint) {
-        changed = compressed
-          .join(labels.select(col("node"), col("comp").as("old")), Seq("node"))
-          .filter(col("comp") =!= col("old"))
-          .count()
-        onRound(r, changed)
-        done = changed == 0L
+    try {
+      val own = Rounds.checkpoint(
+        und.select(col("src").as("node")).distinct().withColumn("comp", col("node")))
+      Rounds.run(own, maxRounds, stop, onRound) { (labels, _) =>
+        val nbrMin = und
+          .join(
+            labels.select(col("node").as("dst"), col("comp").as("dcomp")),
+            Seq("dst"))
+          .groupBy(col("src"))
+          .agg(min(col("dcomp")).as("nmin"))
+          .withColumnRenamed("src", "node")
+        val hashed = labels
+          .join(nbrMin, Seq("node"), "left")
+          .select(
+            col("node"),
+            least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
+        // pointer compression: follow the label one hop through the NEW
+        // mapping (labels are node ids, so every comp resolves to a row)
+        val ptr = hashed.select(col("node").as("pnode"), col("comp").as("pcomp"))
+        Rounds.checkpoint(
+          hashed
+            .join(ptr, col("comp") === col("pnode"), "left")
+            .select(
+              col("node"),
+              least(col("comp"), coalesce(col("pcomp"), col("comp"))).as("comp")))
       }
-      labels = compressed
-      if (!done) r += 1
-    }
-    (labels, math.min(r, maxRounds), changed)
+    } finally und.unpersist()
   }
 
-  def labelPropagation(spark: SparkSession, sfDir: String): DataFrame =
-    labelPropagation(spark, sfDir, eagerRelease = false)
-
-  /** `eagerRelease` trades one blocking job per round for bounded cache:
-    * materialize each round, then free the previous round's label frame
-    * — without it a long LPA chain holds |nodes| × rounds cached rows
-    * until CacheScope's batch-end reclaim, which at 100× corpus and many
-    * rounds is real executor memory held for nothing. At the gate's 3
-    * rounds the held memory is trivial and the extra per-round job
-    * overhead dominates (measured 0.7 s lazy vs 4.2 s eager at sf0.1),
-    * so the GATE runs lazy; a long-chain caller flips the flag — the
-    * same memory-vs-latency dial g12's per-round localCheckpoint turns.
-    */
-  def labelPropagation(spark: SparkSession, sfDir: String, eagerRelease: Boolean): DataFrame = {
-    val (_, labels) = lpaLabelFrames(spark, sfDir, eagerRelease)
+  def labelPropagation(spark: SparkSession, sfDir: String): DataFrame = {
+    val (_, labels) = lpaLabelFrames(spark, sfDir)
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("community_size"))
     labels
       .join(sizes, Seq("label"))
@@ -1784,21 +1777,18 @@ object RelationalQueries {
   /** The g13 LPA loop through its converged label frame: (persisted
     * undirected edge frame, node → label). Shared by g13 (which adds
     * community sizes) and g16 (which scores the partition's modularity).
+    * The rounds compose lazily (linear lineage, no per-round job), so
+    * they are a plain fold, not [[graft.Rounds]].
     */
-  private def lpaLabelFrames(
-      spark: SparkSession,
-      sfDir: String,
-      eagerRelease: Boolean): (DataFrame, DataFrame) = {
+  private def lpaLabelFrames(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     val e = coOccurrenceEdges(spark, sfDir)
     val und = e
       .select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = und.select(col("src").as("node"), col("src").as("label")).distinct()
-    var r = 0
-    while (r < LpaRounds) {
-      val prev = labels
-      labels = und
+    val own = und.select(col("src").as("node"), col("src").as("label")).distinct()
+    val labels = (1 to LpaRounds).foldLeft(own) { (labels, _) =>
+      und
         .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("c"))
@@ -1806,13 +1796,6 @@ object RelationalQueries {
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("src").as("node"), (-col("m.nl")).as("label"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (eagerRelease) {
-        // round 0's `prev` is the unpersisted seed — unpersist no-ops
-        labels.count()
-        prev.unpersist()
-        ()
-      }
-      r += 1
     }
     (und, labels)
   }
@@ -1830,7 +1813,7 @@ object RelationalQueries {
     * never a driver collect.
     */
   def modularity(spark: SparkSession, sfDir: String): DataFrame = {
-    val (und, labels) = lpaLabelFrames(spark, sfDir, eagerRelease = false)
+    val (und, labels) = lpaLabelFrames(spark, sfDir)
     val e = und.filter(col("src") < col("dst")).select(col("src").as("a"), col("dst").as("b"))
     val m = e.agg(count(lit(1)).as("m"))
     val lab = labels
@@ -1893,14 +1876,14 @@ object RelationalQueries {
       .select(col("c"), col("p"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var h = e.select(col("c")).distinct().withColumn("score", lit(1L).cast(d38))
-    var a = e.join(h, Seq("c")).groupBy(col("p")).agg(sum(col("score")).as("score"))
-    h = e.join(a, Seq("p")).groupBy(col("c")).agg(sum(col("score")).as("score"))
-    var r = 1
-    while (r < HitsRounds) {
-      a = e.join(h, Seq("c")).groupBy(col("p")).agg(sum(col("score")).as("score"))
-      h = e.join(a, Seq("p")).groupBy(col("c")).agg(sum(col("score")).as("score"))
-      r += 1
+    def authority(h: DataFrame) =
+      e.join(h, Seq("c")).groupBy(col("p")).agg(sum(col("score")).as("score"))
+    def hub(a: DataFrame) =
+      e.join(a, Seq("p")).groupBy(col("c")).agg(sum(col("score")).as("score"))
+    val a0 = authority(e.select(col("c")).distinct().withColumn("score", lit(1L).cast(d38)))
+    val (a, h) = (2 to HitsRounds).foldLeft((a0, hub(a0))) { case ((_, h), _) =>
+      val a = authority(h)
+      (a, hub(a))
     }
     a.select(lit("auth").as("role"), col("p").as("node"), col("score").cast("string").as("score"))
       .unionAll(

@@ -888,14 +888,13 @@ object VectorQueries {
     val base = baseIn
     // Persist pins the edge materialization (one distinct shuffle, shared
     // by every probe and — via CacheManager plan dedup — across repeated
-    // invocations in a session); the localCheckpoint on top CUTS THE
-    // LINEAGE, so the per-round jobs below carry a one-node scan instead
-    // of re-analyzing the whole index-build tree on every action (v22's
+    // invocations in a session); the checkpoint on top CUTS THE LINEAGE,
+    // so the per-round jobs below carry a one-node scan instead of
+    // re-analyzing the whole index-build tree on every action (v22's
     // maintained-edge lineage spans the kNN build + delta NN-descent —
     // measured ~6 s/rep of pure driver re-analysis without the cut).
-    val und = undIn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .localCheckpoint()
+    val und = graft.Rounds.checkpoint(
+      undIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // O(1) entry points: smallest md5-rank ids (TakeOrdered, no global
     // window), the kmseed draw with its own salt
     val seeds = base
@@ -939,18 +938,18 @@ object VectorQueries {
     // exactly this duplication (guide §7.2 "duplicated subtrees", §3.3
     // "materialise intermediates"). The scored set is BOUNDED — |queries|
     // x (seeds + co-bucket + rounds*beam*degree) rows, corpus-independent
-    // — so eagerly cutting lineage per round (localCheckpoint, the
-    // kCore/Components round convention) keeps the plan LINEAR in rounds:
-    // each round is one window cut + one bounded candidate join + one
-    // scored union over the previous round's materialized rows.
+    // — so the rounds run on [[graft.Rounds]], which keeps the plan LINEAR
+    // in rounds and frees each superseded round: each round is one window
+    // cut + one bounded candidate join + one scored union over the
+    // previous round's materialized rows.
     val beamW = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val sc0 = score(
-      globalPairs
-        .unionAll(bucketPairs)
-        .filter(col("vec_id") =!= col("query_id"))
-        .distinct())
-      .localCheckpoint()
-    val scored = (1 to nRounds).foldLeft(sc0) { (sc, _) =>
+    val sc0 = graft.Rounds.checkpoint(
+      score(
+        globalPairs
+          .unionAll(bucketPairs)
+          .filter(col("vec_id") =!= col("query_id"))
+          .distinct()))
+    val scored = graft.Rounds.run(sc0, nRounds) { (sc, _) =>
       val frontier = sc
         .withColumn("frnk", row_number().over(beamW))
         .filter(col("frnk") <= GannBeam)
@@ -960,13 +959,8 @@ object VectorQueries {
         .select(col("query_id"), col("dst").as("vec_id"))
         .filter(col("vec_id") =!= col("query_id"))
         .distinct()
-      val next = sc.unionAll(score(cands)).distinct().localCheckpoint()
-      // the superseded round's blocks are dead once `next` materializes
-      // (eager checkpoint): nothing reads `sc` again — free it instead of
-      // holding round-count block sets until batch reclamation (§5)
-      graft.CacheScope.freeCheckpoint(sc)
-      next
-    }
+      graft.Rounds.checkpoint(sc.unionAll(score(cands)).distinct())
+    }.state
     scored
       .withColumn("rnk", row_number().over(beamW).cast("long"))
       .filter(col("rnk") <= GannTopK)

@@ -17,8 +17,9 @@ class FixpointSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("g19 MIS: Luby converges; the gate's rounds are the fixpoint's prefix; MIS laws hold") {
-    val (winFix, roundsRun, left) =
-      RelationalQueries.misWinners(spark, sf, maxRounds = 64, toFixpoint = true)
+    val run = RelationalQueries.misWinners(
+      spark, sf, maxRounds = 64, stop = RelationalQueries.LubySettled)
+    val (winFix, roundsRun, left) = (run.state, run.rounds, if (run.stopped) 0L else -1L)
     info(s"fixpoint after $roundsRun rounds, undecided residue $left")
     assert(left == 0L, s"Luby must empty the undecided set (residue $left after $roundsRun)")
     val fix = winFix.select("node", "round").as[(Long, Long)].collect()
@@ -49,7 +50,8 @@ class FixpointSpec extends AnyFunSuite {
   test("g18 k-truss: the 3-round peel IS the fixpoint on this corpus") {
     val counts = scala.collection.mutable.ListBuffer.empty[(Int, Long)]
     val fix = RelationalQueries
-      .kTrussPeelRounds(spark, sf, toFixpoint = true)((r, e) => counts += ((r, e.count())))
+      .kTrussPeelRounds(spark, sf, maxRounds = 64, stop = RelationalQueries.PeelStable,
+        onRound = r => counts += ((r.index, r.next.n)))
     info(s"peel trajectory: ${counts.mkString(", ")}")
     val fixSet = fix.select("a", "b", "common").as[(Long, Long, Long)].collect().toSet
     val gateSet = RelationalQueries
@@ -105,8 +107,9 @@ class FixpointSpec extends AnyFunSuite {
   }
 
   test("g20 components: the 8-round budget IS the fixpoint; labels match union-find ground truth") {
-    val (labFix, roundsRun, changed) =
-      RelationalQueries.componentRounds(spark, sf, maxRounds = 64, toFixpoint = true)
+    val run = RelationalQueries.componentRounds(
+      spark, sf, maxRounds = 64, stop = RelationalQueries.LabelsStable)
+    val (labFix, roundsRun, changed) = (run.state, run.rounds, if (run.stopped) 0L else -1L)
     info(s"fixpoint after $roundsRun rounds (last counted delta $changed)")
     assert(changed == 0L, s"loop must converge (delta $changed after $roundsRun rounds)")
     assert(roundsRun <= 8, s"gate's 8-round budget must cover the fixpoint ($roundsRun)")

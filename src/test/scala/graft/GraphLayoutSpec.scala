@@ -13,16 +13,6 @@ class GraphLayoutSpec extends AnyFunSuite {
   lazy val spark = Sessions.local("4")
   import spark.implicits._
 
-  test("g13: eager-release LPA path is bit-identical to the lazy gate path") {
-    val sf = "/root/testdata/sf0.001"
-    val lazyRows = queries.RelationalQueries
-      .labelPropagation(spark, sf).collect().toSet
-    val eagerRows = queries.RelationalQueries
-      .labelPropagation(spark, sf, eagerRelease = true).collect().toSet
-    assert(lazyRows.nonEmpty && lazyRows == eagerRows,
-      "the memory-bounded long-chain path must not change results")
-  }
-
   test("triangles: K4 minus an edge — exact participation counts") {
     // K4 on {1,2,3,4} without (3,4): triangles (1,2,3) and (1,2,4)
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L))
@@ -115,6 +105,13 @@ class GraphLayoutSpec extends AnyFunSuite {
       .collect()
       .toMap
     assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
+    // a zero budget returns the seed set itself
+    val seedOnly = graft.operators.Bfs
+      .hops(edges, Seq(1L).toDF("node"), 0)
+      .as[(Long, Long)]
+      .collect()
+      .toMap
+    assert(seedOnly == Map(1L -> 0L))
   }
 
   test("common neighbors per edge: K4 minus an edge") {

@@ -220,6 +220,10 @@ class ScaleOpsSpec extends AnyFunSuite {
     val deep = Components.connectedComponentsAuto(chainNodes, chainEdges)
       .as[(Long, Long)].collect().toMap
     assert((0L to 60L).forall(deep(_) == 0L), s"deep chain must fall back to star: $deep")
+    // called directly, propagation still refuses the chain it cannot finish
+    intercept[IllegalStateException] {
+      Components.connectedComponents(chainNodes, chainEdges)
+    }
     // above the threshold the dispatch goes straight to star (threshold 2
     // forces the branch on a 4-edge graph)
     val forced = Components.connectedComponentsAuto(nodes, edges, propagationMaxEdges = 2L)
